@@ -87,7 +87,7 @@ def main() -> int:
         except Exception:  # noqa: BLE001 — diagnostics must not fail the bench
             return 0, 0
 
-    def steal_sample(window_sec: float = 15.0) -> float:
+    def steal_sample(window_sec: float) -> float:
         """Measured steal%% over a sleep window (the sample doubles as
         the guard's wait tick)."""
         s0, t0 = cpu_ticks()
@@ -95,9 +95,11 @@ def main() -> int:
         s1, t1 = cpu_ticks()
         return 100.0 * (s1 - s0) / max(t1 - t0, 1)
 
+    # the first steal sample is mandatory and reported on its own;
+    # waited_sec counts only the guard's extra wait ticks
+    steal_window = 15.0
+    steal_now = steal_sample(steal_window)
     waited = 0.0
-    steal_now = steal_sample(15.0)
-    waited += 15.0
     while (loaded() or steal_now > max_steal) and waited < max_wait:
         l1, l5, l15 = os.getloadavg()
         print(f"# bench load guard: load {l1:.1f}/{l5:.1f}/{l15:.1f} "
@@ -105,16 +107,15 @@ def main() -> int:
               f"(need 1-min<={max_load}, 5-min<={max_load * 1.5}, "
               f"steal<={max_steal}%), waiting ({waited:.0f}s)",
               file=sys.stderr)
-        time.sleep(15.0)
-        waited += 15.0
-        steal_now = steal_sample(15.0)
-        waited += 15.0
+        steal_now = steal_sample(steal_window)
+        waited += steal_window
     load_start = os.getloadavg()
     load_guard = {
         "threshold": max_load,
         "threshold_5min": max_load * 1.5,
         "threshold_steal_pct": max_steal,
         "steal_pct_at_start": round(steal_now, 2),
+        "steal_sample_sec": steal_window,
         "waited_sec": round(waited, 1),
         "quiet": not loaded() and steal_now <= max_steal,
     }

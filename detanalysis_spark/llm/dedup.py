@@ -5,9 +5,11 @@ Designed for the 100 TB regime:
 - **Exact dedup** is one shuffle keyed by content hash (a window over
   the hash partition, not a groupBy + join-back — half the shuffles).
 - **Near-dup candidate generation is banded LSH**: shingle → MinHash
-  signature → per-band bucket hash → self-equi-join on (band, bucket).
-  The join is shuffle-keyed by bucket, so cost tracks the number of
-  *colliding* pairs, never the n² all-pairs space.
+  signature → per-band bucket hash → one sorted posting list per
+  (band, bucket), expanded to its within-bucket pairs. Cost tracks the
+  number of *colliding* pairs, never the n² all-pairs space. Every
+  self-pair generator here shares that kernel
+  (:func:`_posting_list_pairs`).
 - **Verification** (exact n-gram Jaccard) runs only on candidates.
 - Everything up to the final verify join is native Spark SQL
   (``transform``/``aggregate``/``xxhash64`` — whole-stage codegen);
@@ -416,8 +418,7 @@ def ngram_jaccard(sh_a: Column, sh_b: Column) -> Column:
 def verify_candidates(docs: DataFrame, pairs: DataFrame, id_col: str,
                       text_col: str = "text", shingle_n: int = 3,
                       threshold: float = 0.5,
-                      shingle_fn=word_shingles,
-                      materialize: bool = True) -> DataFrame:
+                      shingle_fn=word_shingles) -> DataFrame:
     """Exact Jaccard on candidate pairs only → (id_a, id_b, jaccard).
 
     Docs are first pruned with a semi-join against the candidate id
@@ -426,10 +427,10 @@ def verify_candidates(docs: DataFrame, pairs: DataFrame, id_col: str,
     only candidates match. The expensive set ops then run once per
     *candidate pair*, not per pair of documents.
 
-    EAGER under the default ``materialize=True``: the candidate pair
-    table is evaluated and pinned (``localCheckpoint``) at CALL time.
-    The plan below references ``pairs`` three times (both sides of the
-    id-set union plus the scoring join) and the shingled candidate
+    EAGER: the candidate pair table is evaluated and pinned
+    (``localCheckpoint``) at CALL time. The plan below references
+    ``pairs`` three times (both sides of the id-set union plus the
+    scoring join) and the shingled candidate
     frame twice — without a barrier Catalyst EXPANDS the upstream
     candidate-generation subtree at every reference (measured on the
     PPJoin tier: 44 scans of the corpus / 82 Exchanges in one plan,
@@ -437,21 +438,17 @@ def verify_candidates(docs: DataFrame, pairs: DataFrame, id_col: str,
     are two ids per row and bounded by the screen's output — exactly
     the "decide with small rows" proxy the optimization guide's §8
     tells you to materialize once — and the shingled frame is bounded
-    by the candidate doc set. ``materialize=False`` restores the fully
-    lazy plan for callers that must stay lazy and have already
-    checkpointed their candidates.
+    by the candidate doc set.
     """
-    if materialize:
-        pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
+    pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
     cand_ids = (pairs.select(F.col("id_a").alias(id_col))
                 .union(pairs.select(F.col("id_b").alias(id_col)))
                 .distinct())
     sh = (fan_out_small(docs.select(F.col(id_col), F.col(text_col))
                         .join(cand_ids, id_col, "left_semi"))
           .select(F.col(id_col),
-                  shingle_fn(F.col(text_col), shingle_n).alias("__sh__")))
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
+                  shingle_fn(F.col(text_col), shingle_n).alias("__sh__"))
+          .localCheckpoint(eager=True))
     scored = (pairs
               .join(sh.withColumnRenamed(id_col, "id_a")
                       .withColumnRenamed("__sh__", "sh_a"), "id_a")
@@ -501,7 +498,7 @@ def apply_near_dedup(docs: DataFrame, id_col: str = "doc_id",
     with the ``keep``-most (``max``/``min``) score, ties broken by
     minimum id — one extra small aggregate over cluster members only
     (the clustered subset, not the corpus)."""
-    # no eager checkpoint here: under the common auto fast path the
+    # no eager checkpoint here: under the common driver fast path the
     # pair table's ONLY consumer is near_dup_clusters' bounded probe
     # collect (one evaluation — verify_candidates already truncated
     # the expensive subtrees), so a checkpoint job bought nothing
@@ -541,7 +538,7 @@ def _unionfind_clusters(pairs: DataFrame, edge_rows) -> DataFrame:
     Min-root union + path compression: the smaller root always wins,
     so every root is its component's minimum id — the same
     (id, cluster_id = component min) contract as the distributed
-    paths, exactly."""
+    path, exactly."""
     parent: dict = {}
 
     def find(x):
@@ -568,125 +565,42 @@ def _unionfind_clusters(pairs: DataFrame, edge_rows) -> DataFrame:
 
 
 def near_dup_clusters(pairs: DataFrame, max_iter: int = 20,
-                      accelerate: bool = True,
-                      method: str = "auto",
                       driver_max_edges: int = 200_000,
                       checkpoint_fallback: bool = False) -> DataFrame:
     """Connected components over (id_a, id_b) edges → (id, cluster_id).
-    EAGER under the default ``method="auto"``: it runs one bounded
-    ``limit(driver_max_edges + 1).collect()`` probe job at CALL time
-    (not at first action), and when the table exceeds the bound the
-    pair plan is evaluated again by the distributed run — callers with
-    an expensive un-checkpointed upstream should either checkpoint the
-    pairs first (as :func:`apply_near_dedup` does) or pass
-    ``driver_max_edges=0`` to stay fully lazy/distributed.
+    EAGER: it runs one bounded ``limit(driver_max_edges + 1).collect()``
+    probe job at CALL time (not at first action), and when the table
+    exceeds the bound the pair plan is evaluated again by the
+    distributed run — callers with an expensive un-checkpointed
+    upstream should either checkpoint the pairs first or pass
+    ``checkpoint_fallback=True`` (as :func:`apply_near_dedup` does), or
+    pass ``driver_max_edges=0`` to stay fully lazy/distributed.
 
-    ``method="auto"`` first tries that BOUNDED driver fast path: if
-    the pair table fits, union-find on the driver (microseconds,
-    ≤ ~3 MB) replaces several distributed rounds — the same small-side
-    economics as broadcasting a join. Near-dup pair tables are tiny
-    relative to the corpus (they hold only candidate duplicates), so
-    this is the common case; identical (id, cluster_id = component
-    min) output either way, and anything larger falls through to the
-    distributed star path.
-
-    Past the bound, ``method="auto"`` runs the alternating
-    large/small-star algorithm (:func:`near_dup_clusters_star`) — its
-    per-round edge set SHRINKS as components collapse, and
-    tools/cc_probe.py measures it 1.6-2x faster than pointer jumping
-    on skewed dup graphs with an identical output partition — unless
-    ``accelerate=False`` explicitly asks for plain min-label
-    propagation. ``method="jump"`` forces the label-propagation path
-    below; ``method="star"`` forces star (both always distributed).
-
-    The jump path: iterative min-label propagation with pointer
-    jumping — each round
-    every vertex takes the least of (its label, the minimum label in
-    its neighborhood, its label's label). The neighbor-min step alone
-    (large-star style) converges in O(component diameter) rounds; the
-    pointer-jump ``label(label(v))`` halves the remaining distance to
-    the component minimum each round, so chain-shaped components
-    converge in O(log diameter) rounds instead — a planted 1000-link
-    chain closes in ~11 rounds. Labels only ever decrease and always
-    hold a component member's id, so a combined-update fixpoint is
-    exactly the per-component minimum (the plain-propagation argument
-    unchanged). Each round is two id-keyed shuffles (edges⋈labels +
-    labels⋈labels); ``localCheckpoint`` truncates lineage so plans
-    stay flat. Raises if max_iter is exhausted before convergence.
-    ``accelerate=False`` restores plain propagation (one shuffle per
-    round — marginally cheaper when clusters are known-shallow).
+    If the pair table fits the bound, union-find on the driver
+    (microseconds, ≤ ~3 MB) replaces several distributed rounds — the
+    same small-side economics as broadcasting a join. Near-dup pair
+    tables are tiny relative to the corpus (they hold only candidate
+    duplicates), so this is the common case. Anything larger runs the
+    alternating large/small-star algorithm
+    (:func:`near_dup_clusters_star`, at most ``max_iter`` rounds),
+    whose per-round edge set SHRINKS as components collapse. Both give
+    the identical (id, cluster_id = component min) output.
 
     ``checkpoint_fallback=True`` localCheckpoints the pair table just
-    before entering a distributed path — for callers that skipped
-    their own eager barrier because the auto fast path consumes the
-    pairs exactly once (``apply_near_dedup``); the barrier is then
-    paid only when the graph actually exceeds ``driver_max_edges``.
+    before entering the distributed path — for callers that skipped
+    their own eager barrier because the fast path consumes the pairs
+    exactly once (``apply_near_dedup``); the barrier is then paid only
+    when the graph actually exceeds ``driver_max_edges``.
     """
-    if method not in ("auto", "star", "jump"):
-        raise ValueError(f"bad method {method!r} (auto, star, or jump)")
-    # the fast path engages only on the true default (auto+accelerate);
-    # accelerate=False / method="star"/"jump" are explicit algorithm
-    # choices and always run distributed
-    if method == "auto" and accelerate and driver_max_edges > 0:
+    if driver_max_edges > 0:
         head = (pairs.select("id_a", "id_b")
                 .limit(driver_max_edges + 1).collect())
         if len(head) <= driver_max_edges:
             return _unionfind_clusters(pairs, head)
     if checkpoint_fallback:
-        # the iterative paths below consume the pair plan once per
-        # round; a caller that skipped its own eager checkpoint (the
-        # auto fast path needs only ONE evaluation — see
-        # apply_near_dedup) asks for the barrier here, paid only when
-        # the graph actually exceeds the driver bound
+        # star consumes the pair plan once per round
         pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
-    if method == "star" or (method == "auto" and accelerate):
-        return near_dup_clusters_star(pairs, max_iter=max_iter)
-    edges = (pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-             .union(pairs.select(F.col("id_b").alias("src"),
-                                 F.col("id_a").alias("dst"))))
-    labels = (edges.select(F.col("src").alias("id")).distinct()
-              .withColumn("cluster_id", F.col("id")))
-
-    def label_sum(df: DataFrame):
-        # labels only ever decrease (least-of-neighborhood-and-jump),
-        # so the exact total is a monotone convergence witness — one
-        # agg per round instead of a join + count. decimal(38,0) keeps
-        # the sum exact at any corpus size.
-        return (df.agg(F.sum(F.col("cluster_id").cast("decimal(38,0)")))
-                .collect()[0][0])
-
-    prev_sum = label_sum(labels)
-    for _ in range(max_iter):
-        nbr_min = (edges
-                   .join(labels.withColumnRenamed("id", "dst")
-                               .withColumnRenamed("cluster_id", "nbr_label"),
-                         "dst")
-                   .groupBy(F.col("src").alias("id"))
-                   .agg(F.min("nbr_label").alias("nbr_min")))
-        best = F.least(F.col("cluster_id"),
-                       F.coalesce(F.col("nbr_min"), F.col("cluster_id")))
-        if accelerate:
-            # pointer jump: label(label(v)) — every label is itself a
-            # vertex id, so one self-join resolves the grandparent
-            jump = labels.select(F.col("id").alias("cluster_id"),
-                                 F.col("cluster_id").alias("jump_label"))
-            updated = (labels.join(nbr_min, "id", "left")
-                       .join(jump, "cluster_id", "left")
-                       .select("id", F.least(
-                           best, F.coalesce(F.col("jump_label"),
-                                            F.col("cluster_id")))
-                           .alias("cluster_id"))
-                       .localCheckpoint(eager=True))
-        else:
-            updated = (labels.join(nbr_min, "id", "left")
-                       .select("id", best.alias("cluster_id"))
-                       .localCheckpoint(eager=True))
-        new_sum = label_sum(updated)
-        labels = updated
-        if new_sum == prev_sum:
-            return labels
-        prev_sum = new_sum
-    raise RuntimeError(f"near_dup_clusters: no convergence in {max_iter} rounds")
+    return near_dup_clusters_star(pairs, max_iter=max_iter)
 
 
 def near_dup_clusters_star(pairs: DataFrame,
@@ -700,13 +614,11 @@ def near_dup_clusters_star(pairs: DataFrame,
     u's closed neighborhood; small-star re-parents the smaller ones.
     Each half-round is one groupBy(min) + join + distinct; the edge set
     it rewrites SHRINKS as components collapse into stars, so later
-    rounds get cheaper — on a planted power-law pair graph this runs
-    ~1.6-2x faster than pointer jumping end-to-end (tools/cc_probe.py),
-    and the advantage grows with skew; this IS the default path of
-    :func:`near_dup_clusters` (``method="auto"``). Pointer jumping
-    keeps a fixed |V|+|E| per-round shuffle and a monotone label-sum
-    convergence witness, which is easier to reason about under
-    failure/retry — ``method="jump"`` opts into it.
+    rounds get cheaper — on planted power-law pair graphs and a
+    1000-link chain it measured up to ~2x faster than pointer-jumping
+    min-label propagation, with identical partitions (STATUS.md, "CC
+    algorithm probe"). This is the distributed path of
+    :func:`near_dup_clusters`.
     """
     def _large(edges: DataFrame) -> DataFrame:
         sym = edges.union(edges.select(F.col("v").alias("u"),
@@ -752,8 +664,8 @@ def near_dup_clusters_star(pairs: DataFrame,
     out = labels.union(roots)
     # vertices whose component collapsed out of the edge set entirely
     # (self-loop-only nodes: star rewrites drop u==v edges) are their
-    # own singleton clusters — the jump/union-find paths keep them, so
-    # the star contract must too
+    # own singleton clusters — the union-find path keeps them, so the
+    # star contract must too
     verts = (pairs.select(F.col("id_a").alias("id"))
              .union(pairs.select(F.col("id_b").alias("id"))).distinct())
     lost = (verts.join(out.select("id"), "id", "left_anti")
@@ -849,37 +761,39 @@ def token_cosine_pairs(docs: DataFrame, id_col: str = "doc_id",
     all-pairs product.
 
     Plan: one (id, term) tf aggregate → per-doc norms (id-keyed
-    aggregate) → term-keyed self-join emits a pair row per shared term
-    (the inverted index), folded to per-pair dot products in one
-    map-side-combined aggregate → two norm joins + threshold filter.
+    aggregate) → one term-keyed aggregate builds each term's sorted
+    ``(id, tf)`` posting list (the inverted index,
+    :func:`_posting_list_pairs`), whose upper-triangle expansion emits
+    a tf product per shared term per pair, folded to per-pair dot
+    products in one map-side-combined aggregate → two norm joins +
+    threshold filter.
 
     Scale: pair-generation cost is Σ_term df(term)² — the frequent
     terms dominate, so ``max_df`` drops terms seen in more than that
     many docs from CANDIDATE GENERATION (the standard frequent-term
     pruning of similarity joins; norms still use every term, so
     reported sims are true-cosine lower bounds and a pair sharing only
-    ultra-common terms is the recall traded away). With ``max_df``
-    unset the join is exact.
+    ultra-common terms is the recall traded away). ``term_frequencies``
+    has one row per (id, term), so a term's posting-list size IS its
+    df and the cap is a filter on that list. With ``max_df`` unset the
+    join is exact.
     """
     from .text import term_frequencies
 
     tf = term_frequencies(docs, id_col, text_col)
     norms = tf.groupBy(id_col).agg(
         F.sqrt(F.sum(F.col("tf") * F.col("tf"))).alias("__nrm__"))
-    join_side = tf
-    if max_df is not None:
-        dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("__df__"))
-        join_side = (tf.join(dfreq.filter(F.col("__df__") <= int(max_df)),
-                             "term").drop("__df__"))
-    a = join_side.select(F.col("term"), F.col(id_col).alias("id_a"),
-                         F.col("tf").alias("__tfa__"))
-    b = join_side.select(F.col("term"), F.col(id_col).alias("id_b"),
-                         F.col("tf").alias("__tfb__"))
-    dots = (a.join(b, "term")
+    # NULL-id postings stay in the list so its size is the exact df;
+    # the strict id filter below drops any pair they would form
+    dots = (_posting_list_pairs(tf, ["term"], [id_col, "tf"],
+                                max_group=max_df)
+            .select(F.col(f"__x__.{id_col}").alias("id_a"),
+                    F.col(f"__y__.{id_col}").alias("id_b"),
+                    (F.col("__x__.tf") * F.col("__y__.tf"))
+                    .alias("__p__"))
             .filter(F.col("id_a") < F.col("id_b"))
             .groupBy("id_a", "id_b")
-            .agg(F.sum(F.col("__tfa__") * F.col("__tfb__"))
-                 .alias("__dot__")))
+            .agg(F.sum("__p__").alias("__dot__")))
     na = norms.select(F.col(id_col).alias("id_a"),
                       F.col("__nrm__").alias("__na__"))
     nb = norms.select(F.col(id_col).alias("id_b"),
@@ -901,10 +815,14 @@ def _posting_list_pairs(posts: DataFrame, keys: list[str],
     levels (posexplode picks the left element, slice + explode the
     strictly-later right elements).
 
-    This is the shared replacement for every keyed SELF-JOIN pair
-    generator in this module (gram postings, LSH band buckets,
-    SimHash bands): same pair multiset, but no double sort of the
-    join sides and only a single pass over the posting table —
+    This is the one self-pair generator of the dedup layer: gram
+    postings (exact/containment Jaccard, the prefix filter), MinHash
+    LSH band buckets, token-cosine term postings, the 64-bit hash
+    bands of :func:`_hamming_band_pairs` (SimHash, image and audio
+    hashes) and the embedding-LSH tier of
+    ``similarity.cosine_near_dup_pairs``. Against the keyed self-join
+    it replaced it keeps the pair multiset, but does no double sort of
+    the join sides and only a single pass over the posting table —
     measured ~2x faster end-to-end on the exact-Jaccard tier. Max
     in-flight memory is ONE group's O(m) posting list (never the
     O(m²) pair array): the m ranges where O(m) bytes hurt are
@@ -942,12 +860,10 @@ def _shingle_cooccurrence(docs: DataFrame, id_col: str, text_col: str,
     Plan shape: shingle each doc once (native lambda exprs), attach
     the SET SIZE to every exploded (gram, id) posting so the pair
     aggregate carries both sizes for free — no join back to a per-doc
-    sizes frame (two fewer shuffles than the norm-join layout of
-    :func:`token_cosine_pairs`, whose tf weights can't ride the
-    postings the same way). One gram-keyed aggregate builds each
-    gram's sorted posting list; a streaming upper-triangle expansion
-    emits one row per shared gram per pair; a single map-side-combined
-    aggregate folds them to per-pair intersection counts. Shingle sets
+    sizes frame. One gram-keyed aggregate builds each gram's sorted
+    posting list; a streaming upper-triangle expansion emits one row
+    per shared gram per pair; a single map-side-combined aggregate
+    folds them to per-pair intersection counts. Shingle sets
     are distinct by construction, so the fold is exactly |A ∩ B|.
 
     Scale: cost is Σ_gram df(gram)² — ``max_df`` drops grams shared by
@@ -1199,9 +1115,7 @@ def hash_band_explode(hashes: DataFrame, id_col: str,
                       hash_col: str, bands: int) -> DataFrame:
     """Explode a 64-bit hash column into ``bands`` fixed-width band
     buckets → (id, band, bucket), all native (shiftrightunsigned +
-    mask) — the shared LSH banding kernel behind SimHash text
-    near-dup, perceptual image-hash near-dup, and audio-fingerprint
-    near-dup (``llm.multimodal.phash_bands`` delegates here)."""
+    mask) — the banding step of :func:`_hamming_band_pairs`."""
     if 64 % bands != 0:
         raise ValueError("hash_band_explode: bands must divide 64")
     width = 64 // bands
@@ -1225,31 +1139,47 @@ def simhash_near_dup_pairs(docs: DataFrame, id_col: str = "doc_id",
     fingerprint everything; MinHash's shingle Jaccard catches
     reorderings SimHash misses).
 
-    Candidates come from BAND-exact bucket equi-joins over the 64-bit
-    fingerprint split into ``bands`` fixed-width pieces: by pigeonhole
-    two hashes within hamming h share at least one band whenever
-    bands > h, so the default 8 bands make recall EXACT for
-    ``max_hamming ≤ 7`` — and the join stays keyed by (band, bucket),
-    never all-pairs. Verification is native ``bit_count(a ^ b)``.
-    EAGER: the fingerprint table feeds three plan subtrees (bands +
-    both verify sides) and is checkpointed at call time so each text
-    is tokenized and voted exactly once.
+    Candidates share a band bucket of the 64-bit fingerprint split
+    into ``bands`` fixed-width pieces (:func:`_hamming_band_pairs`):
+    the default 8 bands make recall EXACT for ``max_hamming ≤ 7``,
+    never all-pairs. EAGER: the fingerprint table is checkpointed at
+    call time so each text is tokenized and voted exactly once.
     """
     sh = (fan_out_small(docs.select(F.col(id_col), F.col(text_col)))
           .select(F.col(id_col), simhash(F.col(text_col)).alias("sh"))
           .localCheckpoint(eager=True))
-    bb = hash_band_explode(sh, id_col, hash_col="sh", bands=bands)
+    return _hamming_band_pairs(sh, id_col, "sh", bands, max_hamming)
+
+
+def _hamming_band_pairs(hashes: DataFrame, id_col: str, hash_col: str,
+                        bands: int, max_hamming: int) -> DataFrame:
+    """(id_a < id_b, hamming) pairs of a 64-bit hash table with
+    hamming distance ≤ ``max_hamming`` — the shared kernel behind
+    SimHash text, perceptual image-hash and audio-fingerprint near-dup.
+
+    The hash splits into ``bands`` fixed-width band buckets
+    (:func:`hash_band_explode`); within-bucket id pairs come from
+    :func:`_posting_list_pairs` keyed by (band, bucket), deduplicated
+    across bands, then join back to both hashes by id for the native
+    ``bit_count(a ^ b)`` verify. By pigeonhole two hashes within
+    hamming h share a band whenever ``bands > h``, so recall is exact
+    there. ``hashes`` is read three times (bands + both verify sides):
+    callers checkpoint it first so each input hashes once. NULL ids
+    never pair."""
+    bb = hash_band_explode(hashes, id_col, hash_col, bands)
     cand = (_posting_list_pairs(bb.filter(F.col(id_col).isNotNull()),
                                 ["band", "bucket"], [id_col])
             .select(F.col(f"__x__.{id_col}").alias("id_a"),
                     F.col(f"__y__.{id_col}").alias("id_b"))
             .filter(F.col("id_a") < F.col("id_b"))
             .distinct())
-    ha = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("__a__"))
-    hb = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("__b__"))
+    ha = hashes.select(F.col(id_col).alias("id_a"),
+                       F.col(hash_col).alias("__ha__"))
+    hb = hashes.select(F.col(id_col).alias("id_b"),
+                       F.col(hash_col).alias("__hb__"))
     return (cand.join(ha, "id_a").join(hb, "id_b")
             .select("id_a", "id_b",
-                    hamming_distance(F.col("__a__"), F.col("__b__"))
+                    hamming_distance(F.col("__ha__"), F.col("__hb__"))
                     .alias("hamming"))
             .filter(F.col("hamming") <= int(max_hamming)))
 

@@ -37,7 +37,7 @@ from pyspark.sql.types import (ArrayType, BinaryType, DoubleType,
 
 
 __all__ = [
-    "ahash_array", "dhash_array", "image_phash", "phash_bands",
+    "ahash_array", "dhash_array", "image_phash",
     "image_near_dup_pairs", "audio_fingerprint_array",
     "audio_fingerprint", "audio_near_dup_pairs",
     "IMAGE_META_FIELDS", "AUDIO_META_FIELDS", "decode_raw8",
@@ -797,16 +797,6 @@ def image_phash(df: DataFrame, id_col: str, method: str = "ahash",
     return sel.mapInPandas(run, schema)
 
 
-def phash_bands(hashes: DataFrame, id_col: str, hash_col: str = "phash",
-                bands: int = 8) -> DataFrame:
-    """Explode each 64-bit hash into ``bands`` fixed-width band
-    buckets → (id, band, bucket) — delegates to the shared banding
-    kernel (:func:`detanalysis_spark.llm.dedup.hash_band_explode`, all
-    native), the LSH side input of :func:`image_near_dup_pairs`."""
-    from .dedup import hash_band_explode
-    return hash_band_explode(hashes, id_col, hash_col, bands)
-
-
 def image_near_dup_pairs(df: DataFrame, id_col: str,
                          max_hamming: int = 6, bands: int = 8,
                          method: str = "ahash",
@@ -816,8 +806,9 @@ def image_near_dup_pairs(df: DataFrame, id_col: str,
     distance ≤ ``max_hamming``.
 
     Recall guarantee: exact for ``max_hamming < bands`` (pigeonhole —
-    some band must match); probabilistic above. The candidate join is
-    keyed by (band, bucket), so cost tracks colliding pairs, never n².
+    some band must match); probabilistic above. Candidates share a
+    (band, bucket) posting list (:func:`dedup._hamming_band_pairs`),
+    so cost tracks colliding pairs, never n².
     EAGER: the hash table feeds three plan subtrees (bands + both join
     sides) and Spark has no cross-subtree CSE, so it is checkpointed
     at call time — each image decodes and hashes exactly ONCE instead
@@ -826,7 +817,7 @@ def image_near_dup_pairs(df: DataFrame, id_col: str,
     search instead of failing the job (they can't hash, so they can't
     pair).
     """
-    from .dedup import _posting_list_pairs, hamming_distance
+    from .dedup import _hamming_band_pairs
     _check_on_error(on_error)
     hashes = image_phash(df, id_col, method=method,
                          payload_col=payload_col, on_error=on_error)
@@ -834,22 +825,8 @@ def image_near_dup_pairs(df: DataFrame, id_col: str,
         hashes = (hashes.filter(F.col("corrupt_reason").isNull())
                   .drop("corrupt_reason"))
     hashes = hashes.localCheckpoint(eager=True)
-    bb = phash_bands(hashes, id_col, bands=bands)
-    cand = (_posting_list_pairs(bb.filter(F.col(id_col).isNotNull()),
-                                ["band", "bucket"], [id_col])
-            .select(F.col(f"__x__.{id_col}").alias("id_a"),
-                    F.col(f"__y__.{id_col}").alias("id_b"))
-            .filter(F.col("id_a") < F.col("id_b"))
-            .distinct())
-    ha = hashes.select(F.col(id_col).alias("id_a"),
-                       F.col("phash").alias("__ha__"))
-    hb = hashes.select(F.col(id_col).alias("id_b"),
-                       F.col("phash").alias("__hb__"))
-    return (cand.join(ha, "id_a").join(hb, "id_b")
-            .select("id_a", "id_b",
-                    hamming_distance(F.col("__ha__"), F.col("__hb__"))
-                    .alias("hamming"))
-            .filter(F.col("hamming") <= int(max_hamming)))
+    return _hamming_band_pairs(hashes, id_col, "phash", bands,
+                               max_hamming)
 
 
 # ---------------------------------------------------------------------------
@@ -862,7 +839,8 @@ def image_near_dup_pairs(df: DataFrame, id_col: str,
 # near-dup machinery as image hashes. 32 log-spaced FFT band energies
 # over 32 frames reduce to a (time, freq)-delta sign grid; the 64 most
 # central grid cells pack into the hash. All numpy inside one
-# Arrow-batched pass; banding/joining/verification reuse phash_bands.
+# Arrow-batched pass; banding/joining/verification reuse
+# dedup._hamming_band_pairs.
 
 def audio_fingerprint_array(x: np.ndarray, frame_samples: int = 256,
                             n_bands: int = 9, n_frames: int = 9) -> int:
@@ -971,13 +949,13 @@ def audio_near_dup_pairs(df: DataFrame, id_col: str,
     """(id_a < id_b, hamming) audio pairs with fingerprint hamming
     ≤ ``max_hamming`` — exact recall for ``max_hamming < bands``
     (pigeonhole, default 16 4-bit bands ⇒ guaranteed ≤15), candidates
-    from (band, bucket) equi-joins, never all-pairs. EAGER: the
+    from (band, bucket) posting lists, never all-pairs. EAGER: the
     fingerprint table is checkpointed at call time so each clip
     decodes and fingerprints exactly once across the three consuming
     subtrees (same rationale as :func:`image_near_dup_pairs`).
     ``on_error="quarantine"`` drops undecodable clips from the pair
     search instead of failing the job."""
-    from .dedup import _posting_list_pairs, hamming_distance
+    from .dedup import _hamming_band_pairs
     _check_on_error(on_error)
     fps = audio_fingerprint(df, id_col, payload_col=payload_col,
                             payload_format=payload_format,
@@ -987,19 +965,5 @@ def audio_near_dup_pairs(df: DataFrame, id_col: str,
         fps = (fps.filter(F.col("corrupt_reason").isNull())
                .drop("corrupt_reason"))
     fps = fps.localCheckpoint(eager=True)
-    bb = phash_bands(fps, id_col, hash_col="fingerprint", bands=bands)
-    cand = (_posting_list_pairs(bb.filter(F.col(id_col).isNotNull()),
-                                ["band", "bucket"], [id_col])
-            .select(F.col(f"__x__.{id_col}").alias("id_a"),
-                    F.col(f"__y__.{id_col}").alias("id_b"))
-            .filter(F.col("id_a") < F.col("id_b"))
-            .distinct())
-    fa = fps.select(F.col(id_col).alias("id_a"),
-                    F.col("fingerprint").alias("__fa__"))
-    fb = fps.select(F.col(id_col).alias("id_b"),
-                    F.col("fingerprint").alias("__fb__"))
-    return (cand.join(fa, "id_a").join(fb, "id_b")
-            .select("id_a", "id_b",
-                    hamming_distance(F.col("__fa__"), F.col("__fb__"))
-                    .alias("hamming"))
-            .filter(F.col("hamming") <= int(max_hamming)))
+    return _hamming_band_pairs(fps, id_col, "fingerprint", bands,
+                               max_hamming)

@@ -5,8 +5,9 @@ filter web documents by *registered domain* (eTLD+1).  The heuristic
 :func:`~detanalysis_spark.llm.cleaning.registered_domain` covers the
 common ccTLD families with a bounded literal set; this module is the
 exact path: the full PSL algorithm (https://publicsuffix.org/list/,
-public specification) over a vendored snapshot of the list, or any
-complete downloaded copy passed via ``psl_path``.
+public specification) over the complete list, vendored in-tree, or
+any PSL-format file passed via ``psl_path`` or named by
+``$DETANALYSIS_PSL_PATH``.
 
 Reference parity: the reference engine keys provenance on filename /
 series identity (``/root/reference/detanalysis/analyzer.py:1061-1100``);
@@ -47,11 +48,10 @@ __all__ = [
     "public_suffix_py", "registered_domain_psl",
 ]
 
-_SNAPSHOT = os.path.join(os.path.dirname(__file__), "data",
-                         "public_suffix_snapshot.dat")
 # the COMPLETE list, vendored in-tree (installed from the Debian
 # ``publicsuffix`` package's copy of the publicsuffix.org list, MPL
-# 2.0, ~9.4k exact rules; refresh with ``tools/fetch_psl.py``)
+# 2.0, ~9.4k exact rules; point ``$DETANALYSIS_PSL_PATH`` at a newer
+# copy to refresh)
 _FULL = os.path.join(os.path.dirname(__file__), "data",
                      "public_suffix_list.dat")
 # environment override — points default_psl() at any PSL-format file
@@ -80,8 +80,7 @@ class PslRules:
 
 
 def load_psl(path: str, include_private: bool = True) -> PslRules:
-    """Parse a PSL-format file (the real list or the vendored
-    snapshot). Comments (``//``), blank lines, and — when
+    """Parse a PSL-format file. Comments (``//``), blank lines, and — when
     ``include_private`` is False — everything after the
     ``===BEGIN PRIVATE DOMAINS===`` marker are skipped."""
     exact, wildcard, exception = set(), set(), set()
@@ -111,14 +110,8 @@ def load_psl(path: str, include_private: bool = True) -> PslRules:
 def psl_source() -> str:
     """Path of the rule file :func:`default_psl` resolves to, in
     priority order: ``$DETANALYSIS_PSL_PATH`` (any PSL-format file) →
-    an installed complete list (``tools/fetch_psl.py`` writes
-    ``data/public_suffix_list.dat``) → the vendored snapshot."""
-    env = os.environ.get(_ENV)
-    if env:
-        return env
-    if os.path.exists(_FULL):
-        return _FULL
-    return _SNAPSHOT
+    the vendored complete list (``data/public_suffix_list.dat``)."""
+    return os.environ.get(_ENV) or _FULL
 
 
 @lru_cache(maxsize=8)
@@ -132,11 +125,9 @@ def default_psl(include_private: bool = True) -> PslRules:
 
     The complete publicsuffix.org list is vendored in-tree
     (``data/public_suffix_list.dat``, ~9.4k exact rules + wildcards +
-    exceptions), so this resolves to the full list by default; the
-    ~1,800-rule snapshot remains only as a last-resort fallback for a
-    stripped checkout.  Refresh the vendored copy with ``python
-    tools/fetch_psl.py`` (or point ``$DETANALYSIS_PSL_PATH`` at any
-    newer PSL-format file)."""
+    exceptions), so this resolves to the full list by default; point
+    ``$DETANALYSIS_PSL_PATH`` at any newer PSL-format file to refresh
+    it."""
     return _load_cached(psl_source(), include_private)
 
 

@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from .dedup import _posting_list_pairs
+
 
 def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -360,8 +362,9 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float,
                           ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a < id_b, cos ≥ t).
 
-    With ``lsh``, candidates come from shared (table, bucket) keys and
-    exact cosine runs only inside buckets — the 100 TB path (recall
+    With ``lsh``, candidates come from shared (table, bucket) posting
+    lists (the same upper-triangle kernel as ``lsh_candidate_pairs``)
+    and exact cosine runs only inside buckets — the 100 TB path (recall
     depends on (bits, tables) vs the threshold; near-identical vectors
     collide with probability ≈ 1). Without it, an exact broadcast join
     scores pairs directly: pass ``probes`` (a small slice of ``df``;
@@ -427,11 +430,12 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float,
 
     bb = lsh.explode_buckets(lsh.with_buckets(df, vec_col),
                              id_col=id_col)
-    cand = (bb.withColumnRenamed(id_col, "id_a")
-            .join(bb.withColumnRenamed(id_col, "id_b"),
-                  ["table", "bucket"])
+    cand = (_posting_list_pairs(bb.filter(F.col(id_col).isNotNull()),
+                                ["table", "bucket"], [id_col])
+            .select(F.col(f"__x__.{id_col}").alias("id_a"),
+                    F.col(f"__y__.{id_col}").alias("id_b"))
             .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b").distinct())
+            .distinct())
     pairs = cand.join(c, "id_a").join(d, "id_b")
     sim = dot_rows(F.col("va"), F.col("vb"))
     return (pairs.select("id_a", "id_b", sim.alias("cosine"))

@@ -9,7 +9,8 @@ sum per destination — the same shuffle-by-key shape as a groupBy, no
 driver-side state beyond the loop counter.
 
 The connected-components sibling lives in ``llm/dedup.py``
-(``near_dup_clusters`` — pointer-jumping label propagation); this
+(``near_dup_clusters`` — driver union-find for small graphs,
+alternating large/small-star otherwise); this
 module covers the weighted-propagation family.
 """
 

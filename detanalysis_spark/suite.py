@@ -957,7 +957,7 @@ FROM lbl GROUP BY cluster_id
 """)
 def near_dup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # lazy pairs: the auto fast path consumes them exactly once (the
+    # lazy pairs: the driver fast path consumes them exactly once (the
     # bounded probe collect); the distributed fallback checkpoints
     # inside near_dup_clusters — one job saved in the common case
     pairs = _DD.near_dup_pairs(docs, "doc_id", "text", threshold=0.5)
@@ -4513,7 +4513,7 @@ FROM bands GROUP BY band
 def image_phash_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
-    from .llm.multimodal import image_phash, phash_bands
+    from .llm.multimodal import image_phash
 
     def _mk(ids):
         return ids.map(lambda d: bytes(
@@ -4527,7 +4527,7 @@ def image_phash_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(8).alias("width"), F.lit(8).alias("height"),
         F.lit(1).alias("channels"), F.lit("RAW8").alias("format"))
     hashes = image_phash(imgs, "doc_id")
-    bb = phash_bands(hashes, "doc_id", bands=4)
+    bb = _DD.hash_band_explode(hashes, "doc_id", "phash", bands=4)
     return (bb.groupBy("band")
             .agg(F.count_distinct("bucket").alias("n_buckets"),
                  F.sum("bucket").alias("sum_buckets")))

@@ -662,21 +662,43 @@ def test_image_near_dup_pairs_planted(spark):
     assert all(a == 0 and b == 1 for (a, b) in pairs), pairs
 
 
-def test_phash_bands_reassemble(spark):
+def test_hash_bands_reassemble_and_hamming_kernel(spark):
     # the 8 band buckets reassemble into the original hash — pins the
     # shiftrightunsigned/mask arithmetic incl. the sign bit
-    from detanalysis_spark.llm.multimodal import phash_bands
+    from detanalysis_spark.llm.dedup import (_hamming_band_pairs,
+                                             hash_band_explode)
     vals = [0, -1, 2**63 - 1, -2**63, 0x923456789ABCDEF0 - 2**64]
     hashes = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "id long, phash long")
-    rows = phash_bands(hashes, "id").collect()
+    rows = hash_band_explode(hashes, "id", "phash", 8).collect()
     back = {}
     for r in rows:
         back[r.id] = back.get(r.id, 0) | (r.bucket << (r.band * 8))
     for i, v in enumerate(vals):
         assert back[i] & (2**64 - 1) == v & (2**64 - 1)
     with pytest.raises(ValueError, match="divide 64"):
-        phash_bands(hashes, "id", bands=5)
+        hash_band_explode(hashes, "id", "phash", 5)
+
+    # the shared hamming kernel equals brute force over every row pair
+    # with id_a < id_b below the band count (pigeonhole), including a
+    # duplicated id (each of its rows pairs) and a NULL id (never pairs)
+    planted = list(enumerate(vals)) + [
+        (5, 1), (6, 0b111), (6, -2), (7, 2**40), (8, -1), (None, 0),
+        (None, 1)]
+    hdf = spark.createDataFrame(planted, "id long, phash long")
+
+    def ham(x, y):
+        return bin((x ^ y) & (2**64 - 1)).count("1")
+
+    for h in (0, 3, 7):
+        got = sorted(tuple(r) for r in
+                     _hamming_band_pairs(hdf, "id", "phash", 8, h)
+                     .collect())
+        want = sorted((a, b, ham(x, y))
+                      for a, x in planted for b, y in planted
+                      if a is not None and b is not None and a < b
+                      and ham(x, y) <= h)
+        assert got == want, h
 
 
 # ----------------------------------------------------------------------

@@ -5,8 +5,8 @@ over the pure-Python twin, plus a Spark-vs-python differential for
 Vector source: the public test file published with the PSL
 (https://raw.githubusercontent.com/publicsuffix/list/master/tests/test_psl.txt)
 — checkPublicSuffix(host, expected_registered_domain) semantics.
-The complete publicsuffix.org list is vendored in-tree (round 10);
-snapshot-scoped vectors remain for the fallback path.
+The complete publicsuffix.org list is vendored in-tree and is the
+rule set every test here resolves to.
 """
 import pytest
 from pyspark.sql import functions as F
@@ -106,7 +106,7 @@ def test_check_public_suffix_vectors():
 
 
 def test_private_section_excluded():
-    rules = psl.load_psl(psl._SNAPSHOT, include_private=False)
+    rules = psl.load_psl(psl._FULL, include_private=False)
     # without the private section, github.io is an ordinary io host
     assert psl.registered_domain_py("pages.github.io", rules) == \
         "github.io"
@@ -185,9 +185,9 @@ def test_psl_plan_is_broadcast_only(spark):
 
 
 # ---------------------------------------------------------------------------
-# round-9 snapshot expansion: vectors through newly-added ccTLD
-# families (wildcards *.bd/*.jm/*.fk, FR sectoral, Crown-dependency
-# 3-label rules, LatAm/African/Asian registry families)
+# multi-label families: vectors through ccTLD families (wildcards
+# *.bd/*.jm/*.fk, FR sectoral, Crown-dependency 3-label rules,
+# LatAm/African/Asian registry families)
 # ---------------------------------------------------------------------------
 EXPANSION_VECTORS = [
     ("gouv.fr", None),
@@ -239,10 +239,10 @@ def test_expansion_vectors():
 
 
 def test_snapshot_scale():
-    """The expanded snapshot carries the multi-label rule mass that
+    """The vendored list carries the multi-label rule mass that
     actually changes eTLD+1 (plain one-label TLDs are behaviorally
-    identical to the implicit '*' rule, so their absence is free)."""
-    rules = psl.load_psl(psl._SNAPSHOT)
+    identical to the implicit '*' rule)."""
+    rules = psl.load_psl(psl._FULL)
     multi = [s for s in rules.exact if "." in s]
     assert len(multi) >= 1200
     assert len(rules.wildcard) >= 15
@@ -253,9 +253,8 @@ def test_snapshot_scale():
 def test_vendored_full_list():
     """The complete publicsuffix.org list is vendored in-tree and is
     what default resolution picks: ≥5k exact rules (the full list has
-    ~9.4k; the old snapshot had ~1.8k), section markers present, and
-    checkPublicSuffix vectors from families the snapshot never carried
-    pass — closing the VERDICT r9 L53 'weak' grade."""
+    ~9.4k), section markers present, and checkPublicSuffix vectors
+    through multi-label families pass."""
     import os
     assert os.path.exists(psl._FULL), "full PSL not vendored"
     text = open(psl._FULL, encoding="utf-8").read()
@@ -265,11 +264,8 @@ def test_vendored_full_list():
     assert len(rules.exact) >= 5000
     assert psl.psl_source() == psl._FULL or psl._ENV in os.environ
     full = psl.default_psl()
-    snap = psl.load_psl(psl._SNAPSHOT)
-    # multi-label suffix families that were OUTSIDE the snapshot (so
-    # the old subset grouped them wrong and this list fixes them)
     for suf in ("gov.mr", "co.bn", "com.cv", "co.ua"):
-        assert suf in full.exact and suf not in snap.exact
+        assert suf in full.exact
         host = "a.b." + suf
         assert psl.public_suffix_py(host, full) == suf
         assert psl.registered_domain_py(host, full) == "b." + suf
@@ -277,9 +273,9 @@ def test_vendored_full_list():
 
 def test_psl_source_resolution(tmp_path, monkeypatch):
     """default_psl() resolution order: $DETANALYSIS_PSL_PATH beats the
-    installed/vendored lists, and the matcher actually uses it."""
+    vendored list, and the matcher actually uses it."""
     monkeypatch.delenv(psl._ENV, raising=False)
-    assert psl.psl_source() in (psl._FULL, psl._SNAPSHOT)
+    assert psl.psl_source() == psl._FULL
 
     custom = tmp_path / "tiny_psl.dat"
     custom.write_text("// ===BEGIN ICANN DOMAINS===\n"
@@ -289,8 +285,8 @@ def test_psl_source_resolution(tmp_path, monkeypatch):
     assert psl.psl_source() == str(custom)
     rules = psl.default_psl()
     assert psl.registered_domain_py("a.b.co.zz", rules) == "b.co.zz"
-    # families from the snapshot are gone under the override — proof
-    # the env list is really what's loaded
+    # families from the vendored list are gone under the override —
+    # proof the env list is really what's loaded
     assert psl.registered_domain_py("b.example.co.uk", rules) \
         == "co.uk"
 

@@ -142,8 +142,9 @@ def main() -> int:
                 ref = rows
                 print(f"  {vname}: {len(rows)} pairs (reference)",
                       flush=True)
-            else:
-                assert rows == ref, f"{vname} result mismatch on {cname}"
+            elif rows != ref:
+                raise RuntimeError(
+                    f"{vname} result mismatch on {cname}")
         times: dict[str, list[float]] = {v: [] for v, _ in variants}
         for rep in range(reps):
             for vname, kw in variants:

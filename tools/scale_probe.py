@@ -198,20 +198,19 @@ def main() -> int:
     probe("ivf_topk", ivf(emb1), ivf(embk))
 
     # connected components on a planted CHAIN — the worst case for
-    # plain label propagation (O(diameter) rounds). Both the default
-    # star alternation and pointer jumping must make rounds — and
-    # wall — grow with log(chain length), so the k× chain should cost
-    # ~log2(k) extra rounds, far below k×.
-    def cc(n, method):
+    # plain label propagation (O(diameter) rounds). The distributed
+    # star alternation must make rounds — and wall — grow with
+    # log(chain length), so the k× chain should cost ~log2(k) extra
+    # rounds, far below k×.
+    def cc(n):
         def run():
             pairs = spark.range(n).select(
                 F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
             return D.near_dup_clusters(pairs, max_iter=40,
-                                       method=method).filter(
+                                       driver_max_edges=0).filter(
                 F.col("cluster_id") == 0).count()
         return run
-    probe("cc_chain", cc(1000, "star"), cc(1000 * k, "star"))
-    probe("cc_chain_pointer_jump", cc(1000, "jump"), cc(1000 * k, "jump"))
+    probe("cc_chain", cc(1000), cc(1000 * k))
 
     # one-call curation capstone: the cleaned frame is checkpointed
     # before near-dedup, so the cleaning stack runs ONCE — wall must
