@@ -79,7 +79,9 @@ def main() -> int:
         Total sums the first 8 fields (user..steal) only: guest/
         guest_nice are already folded into user/nice by the kernel, so
         including them double-counts and understates steal% (ADVICE
-        r12)."""
+        r12). The 8-field basis holds from r13 on; earlier
+        BENCH_HISTORY rows summed every field, so the r12→r13 step in
+        the cpu_steal_pct series is this basis change, not the host."""
         try:
             with open("/proc/stat") as f:
                 vals = [int(x) for x in f.readline().split()[1:]]

@@ -221,8 +221,8 @@ def save_probe(weights: np.ndarray, path: str, dim: int | None = None,
             f"weights has length {len(weights)}, expected {dim} "
             f"(no bias) or {dim + 1} (trained intercept last)")
     rows = [(i, float(w)) for i, w in enumerate(weights)]
-    from ..util import write_sidecar_parquet
-    write_sidecar_parquet(spark, rows, "idx int, w double", path)
+    from ..util import write_small_parquet
+    write_small_parquet(spark, rows, path, "idx int, w double")
 
 
 def load_probe(spark, path: str) -> np.ndarray:

@@ -1323,14 +1323,14 @@ def write_lsh_index(docs: DataFrame, path: str, id_col: str = "doc_id",
     bb = lsh_band_buckets(sigs, id_col, "minhash", bands, rpb)
     (bb.repartition(int(bands), F.col("band"))
        .write.mode("overwrite").partitionBy("band").parquet(path))
-    from ..util import write_sidecar_parquet
-    write_sidecar_parquet(
+    from ..util import write_small_parquet
+    write_small_parquet(
         spark,
         [(int(num_hashes), int(bands), int(rpb),
           int(shingle_n), id_col)],
+        path.rstrip("/") + "/_lsh_meta",
         "num_hashes int, bands int, rows_per_band int, "
-        "shingle_n int, id_col string",
-        path.rstrip("/") + "/_lsh_meta")
+        "shingle_n int, id_col string")
 
 
 def read_lsh_meta(spark, path: str):
@@ -1401,8 +1401,8 @@ def lsh_index_probe(spark, path: str, probe_docs: DataFrame,
 
 def update_near_dup_clusters(assignments: DataFrame,
                              new_pairs: DataFrame,
-                             new_ids: DataFrame | None = None,
-                             **cc_kwargs) -> DataFrame:
+                             new_ids: DataFrame | None = None
+                             ) -> DataFrame:
     """Incremental connected-component maintenance (round 12): fold a
     new batch's near-dup pairs into an EXISTING clustering without
     re-running CC over the corpus — the clustering counterpart of
@@ -1445,7 +1445,7 @@ def update_near_dup_clusters(assignments: DataFrame,
                .select(F.coalesce("sup_a", F.col("id_a")).alias("id_a"),
                        F.coalesce("sup_b", F.col("id_b")).alias("id_b"))
                .filter(F.col("id_a") != F.col("id_b")))
-    sup_labels = near_dup_clusters(reduced, **cc_kwargs)
+    sup_labels = near_dup_clusters(reduced)
 
     # relabel existing rows: only touched clusters appear in the remap
     remap = sup_labels.select(F.col("id").alias("cluster_id"),

@@ -736,9 +736,9 @@ class IVFIndex:
             rows += [(int(c), 1_000_000 + int(p), float(v))
                      for c, row in enumerate(self.cell_means)
                      for p, v in enumerate(row)]
-        from ..util import write_sidecar_parquet
-        write_sidecar_parquet(spark, rows + meta,
-                              "cell int, pos int, value double", path)
+        from ..util import write_small_parquet
+        write_small_parquet(spark, rows + meta, path,
+                            "cell int, pos int, value double")
 
     @classmethod
     def load(cls, spark, path: str, n_probe: int | None = None

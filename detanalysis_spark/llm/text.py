@@ -715,10 +715,10 @@ def save_bpe(spark, merges: Sequence[tuple[str, str]], path: str,
     Spark writers, so the artifact lands on whatever filesystem the
     session targets (HDFS/S3/local alike) — train once on the corpus,
     tokenize everywhere."""
-    from ..util import write_sidecar_parquet
+    from ..util import write_small_parquet
     rows = [(i, a, b) for i, (a, b) in enumerate(merges)]
-    write_sidecar_parquet(spark, rows, "rank int, a string, b string",
-                          f"{path}/merges")
+    write_small_parquet(spark, rows, f"{path}/merges",
+                        "rank int, a string, b string")
     if vocab is not None:
         vocab.write.mode("overwrite").parquet(f"{path}/vocab")
 
@@ -747,9 +747,9 @@ def save_bigram_lm(lm: BigramLM, path: str) -> None:
     spark = lm.bigrams.sparkSession
     lm.bigrams.write.mode("overwrite").parquet(f"{path}/bigrams")
     lm.unigrams.write.mode("overwrite").parquet(f"{path}/unigrams")
-    from ..util import write_sidecar_parquet
-    write_sidecar_parquet(spark, [(int(lm.total), float(lm.alpha))],
-                          "total long, alpha double", f"{path}/meta")
+    from ..util import write_small_parquet
+    write_small_parquet(spark, [(int(lm.total), float(lm.alpha))],
+                        f"{path}/meta", "total long, alpha double")
 
 
 def load_bigram_lm(spark, path: str) -> BigramLM:

@@ -420,10 +420,10 @@ def cow_write(df: DataFrame, path: str, key_cols: Sequence[str] | str,
     (df.withColumn("__bucket__", _bucket_expr(keys, num_buckets))
        .repartition(int(num_buckets), F.col("__bucket__"))
        .write.mode("overwrite").partitionBy("__bucket__").parquet(path))
-    from ..util import write_sidecar_parquet
-    write_sidecar_parquet(spark, [(int(num_buckets), ",".join(keys))],
-                          "num_buckets int, key_cols string",
-                          path.rstrip("/") + "/_cow_meta")
+    from ..util import write_small_parquet
+    write_small_parquet(spark, [(int(num_buckets), ",".join(keys))],
+                        path.rstrip("/") + "/_cow_meta",
+                        "num_buckets int, key_cols string")
 
 
 def read_cow(spark: SparkSession, path: str,

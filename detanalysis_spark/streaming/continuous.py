@@ -165,26 +165,17 @@ def streaming_psd_moments(chunks: DataFrame, fs: float,
                  F.avg(F.col("p2") * F.col("p2")).alias("r_ii")))
 
 
-def _write_cross_delta_batch(batch_df: DataFrame, batch_id: int,
-                             channels: list[str], fs: float,
-                             path: str) -> None:
-    """One micro-batch of the cross-spectral delta log: reduce the
-    batch's chunks to per-bin partial pair-product sums and land them
-    in the batch's own ``__batch_id__`` partition with dynamic
-    overwrite — replay-idempotent (a re-applied batch id overwrites
-    its prior partition, never appends a second copy)."""
+def _cross_delta_batch(batch_df: DataFrame, channels: list[str],
+                       fs: float) -> DataFrame:
+    """One micro-batch of the cross-spectral delta log: the batch's
+    chunks reduced to per-bin partial pair-product sums."""
     from ..vibration import cross_bin_products, cross_moment_fields
 
     flds = cross_moment_fields(channels)
     zipped = cross_bin_products(batch_df, channels, fs, strict=True)
     aggs = [F.count(F.lit(1)).alias("n")]
     aggs += [F.sum(F.col("v").getField(f)).alias(f) for f in flds]
-    (zipped.groupBy("bin").agg(*aggs)
-     .withColumn("__batch_id__", F.lit(int(batch_id)))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("__batch_id__")
-     .parquet(path))
+    return zipped.groupBy("bin").agg(*aggs)
 
 
 def streaming_cross_deltas(chunks: DataFrame, channels: list[str],
@@ -213,25 +204,18 @@ def streaming_cross_deltas(chunks: DataFrame, channels: list[str],
 
     Exactly-once: ``foreachBatch`` is at-least-once (a crash between
     the parquet write and the checkpoint commit replays the batch), so
-    each batch's partials land in their own ``__batch_id__`` PARTITION
-    with dynamic partition overwrite — the same sink shape as
-    :func:`stream_to_parquet`'s foreachBatch path. A replayed
-    micro-batch OVERWRITES its own partition instead of appending a
-    duplicate copy, so the merged moments never double-weight a batch.
+    the partials go through :func:`stream_to_parquet`'s idempotent
+    ``__batch_id__`` sink: a replayed micro-batch OVERWRITES its own
+    partition instead of appending a duplicate copy, so the merged
+    moments never double-weight a batch.
     """
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        _write_cross_delta_batch(batch_df, batch_id, channels, fs, path)
+    def reduce_batch(batch_df: DataFrame, _batch_id: int) -> DataFrame:
+        return _cross_delta_batch(batch_df, channels, fs)
 
-    q = (chunks.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", checkpoint_dir)
-         .queryName(query_name)
-         .trigger(availableNow=True).start())
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming cross-moment drain {query_name!r} did not "
-            f"finish in {timeout_sec}s")
-    return q
+    return stream_to_parquet(chunks, path, checkpoint_dir,
+                             transform=reduce_batch,
+                             query_name=query_name,
+                             timeout_sec=timeout_sec)
 
 
 def read_cross_moments_from_deltas(spark: SparkSession, path: str,
@@ -277,14 +261,8 @@ def run_available_now(sdf: DataFrame, query_name: str = "moments",
         spark.conf.set("spark.sql.shuffle.partitions",
                        str(int(shuffle_partitions)))
     try:
-        q = (sdf.writeStream.format("memory").queryName(query_name)
-             .outputMode(output_mode)
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"streaming drain {query_name!r} did not finish in "
-                f"{timeout_sec}s")
+        _drain(sdf.writeStream.format("memory").outputMode(output_mode),
+               query_name, timeout_sec)
     finally:
         if old is not None:
             spark.conf.set("spark.sql.shuffle.partitions", old)
@@ -496,29 +474,41 @@ def stream_to_parquet(sdf: DataFrame, path: str, checkpoint_dir: str,
     StreamingQuery.
     """
     if transform is None:
-        q = (sdf.writeStream.format("parquet")
-             .option("path", path)
-             .option("checkpointLocation", checkpoint_dir)
-             .queryName(query_name)
-             .trigger(availableNow=True).start())
+        writer = sdf.writeStream.format("parquet").option("path", path)
     else:
-        def _write(batch_df: DataFrame, batch_id: int) -> None:
-            out = transform(batch_df, batch_id)
-            if out is not None:
-                (out.withColumn("__batch_id__", F.lit(int(batch_id)))
-                 .write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("__batch_id__")
-                 .parquet(path))
+        writer = sdf.writeStream.foreachBatch(
+            _partitioned_batch_writer(transform, path))
+    return _drain(writer.option("checkpointLocation", checkpoint_dir),
+                  query_name, timeout_sec)
 
-        q = (sdf.writeStream.foreachBatch(_write)
-             .option("checkpointLocation", checkpoint_dir)
-             .queryName(query_name)
-             .trigger(availableNow=True).start())
+
+def _partitioned_batch_writer(transform, path: str):
+    """The foreachBatch function of :func:`stream_to_parquet`'s
+    idempotent sink: ``transform``'s output lands in the batch's own
+    ``__batch_id__`` partition with dynamic overwrite, so a replayed
+    batch id overwrites its prior partition instead of appending."""
+    def _write(batch_df: DataFrame, batch_id: int) -> None:
+        out = transform(batch_df, batch_id)
+        if out is not None:
+            (out.withColumn("__batch_id__", F.lit(int(batch_id)))
+             .write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("__batch_id__")
+             .parquet(path))
+
+    return _write
+
+
+def _drain(writer, query_name: str, timeout_sec: int):
+    """Start a configured ``DataStreamWriter`` as ``query_name`` with
+    ``Trigger.AvailableNow`` and wait for the bounded backlog to drain.
+    On timeout the query is stopped (a running query would race its
+    reader) and TimeoutError raised. Returns the terminated query."""
+    q = writer.queryName(query_name).trigger(availableNow=True).start()
     if not q.awaitTermination(timeout_sec):
         q.stop()
         raise TimeoutError(
-            f"streaming sink {query_name!r} did not finish in "
+            f"streaming query {query_name!r} did not finish in "
             f"{timeout_sec}s")
     return q
 
@@ -700,6 +690,7 @@ def streaming_upsert(sdf: DataFrame, table_path: str,
     wrong geometry is impossible by construction.
     """
     from ..sources.layout import upsert_parquet
+    from ..util import write_small_parquet
 
     meta_path = table_path.rstrip("/") + "/_cow_stream_meta"
     lineage = _lineage_id(checkpoint_dir)
@@ -731,18 +722,9 @@ def streaming_upsert(sdf: DataFrame, table_path: str,
                    .withColumn("__rn__", F.row_number().over(w))
                    .filter(F.col("__rn__") == 1).drop("__rn__"))
         upsert_parquet(spark, table_path, winners)
-        from ..util import write_sidecar_parquet
-        write_sidecar_parquet(spark, [(int(batch_id), lineage)],
-                              "last_batch long, checkpoint string",
-                              meta_path)
+        write_small_parquet(spark, [(int(batch_id), lineage)], meta_path,
+                            "last_batch long, checkpoint string")
 
-    q = (sdf.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", checkpoint_dir)
-         .queryName(query_name)
-         .trigger(availableNow=True).start())
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming upsert {query_name!r} did not finish in "
-            f"{timeout_sec}s")
-    return q
+    return _drain(sdf.writeStream.foreachBatch(_apply)
+                  .option("checkpointLocation", checkpoint_dir),
+                  query_name, timeout_sec)

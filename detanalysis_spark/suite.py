@@ -15,6 +15,9 @@ hashes):
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -26,8 +29,8 @@ from .operators.stats import SIGMA_LO_PCT, SIGMA_HI_PCT
 from .semiautocut import Semiautocut, MasterSemiautocuts, _SIG_LO, _SIG_HI
 from .sources import load_table
 from .util import fan_out_small as _FAN
-from .util import write_local_fixture_parquet as _write_fixture
 from .util import local_frame as _LF
+from .util import write_small_parquet
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -40,6 +43,20 @@ def query(name: str, oracle: str | None = None):
             ORACLES[name] = oracle
         return fn
     return deco
+
+
+def _scratch_dir(sf_dir: str, tag: str) -> str:
+    """Fresh scratch path ``<tmp>/detanalysis_spark_<pid>/<sf>_<tag>``
+    for a query's write-then-read dataset, staged stream input or
+    streaming checkpoint. Removed first, not created. The PID
+    namespace keeps concurrent suite runs from racing on one dataset
+    (one session's overwrite would delete files under the other's
+    read); the pre-clean gives every call a fresh checkpoint."""
+    path = os.path.join(
+        tempfile.gettempdir(), f"detanalysis_spark_{os.getpid()}",
+        f"{os.path.basename(os.path.normpath(sf_dir))}_{tag}")
+    shutil.rmtree(path, ignore_errors=True)
+    return path
 
 
 def cents(col: F.Column) -> F.Column:
@@ -906,18 +923,12 @@ WHERE len(list_intersect(a.sh, b.sh))::DOUBLE /
       len(list_distinct(list_concat(a.sh, b.sh))) >= 0.5
 """)
 def lsh_index_screen_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from .llm.dedup import (append_lsh_index, lsh_index_probe,
                             verify_candidates, write_lsh_index)
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter("doc_id >= 100")
     probe = docs.filter("doc_id < 100")
-    path = os.path.join(
-        f"/tmp/detanalysis_spark_textio_{os.getpid()}",
-        os.path.basename(os.path.normpath(sf_dir)) + "_lsh_index")
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_dir(sf_dir, "lsh_index")
     write_lsh_index(corpus.filter("doc_id < 300"), path)
     append_lsh_index(spark, path, corpus.filter("doc_id >= 300"))
     cand = (lsh_index_probe(spark, path, probe)
@@ -1086,10 +1097,10 @@ def jaccard_pairs_prefix_filtered(spark: SparkSession,
 # boilerplate grams (~100× the output pairs), while the prefix tier
 # posts only each doc's rarest |X|−⌈t|X|⌉+1 grams — all df ≤ 2 here —
 # and never joins through the boilerplate at all.
-# tools/crossover_probe.py measures the two tiers head-to-head on
-# this corpus; the oracle is the exact all-pairs Jaccard over the
-# same construction, so the tier's losslessness (prefix lemma) is
-# what the hash gate pins.
+# CROSSOVER.json records the two tiers head-to-head on this corpus;
+# the oracle is the exact all-pairs Jaccard over the same
+# construction, so the tier's losslessness (prefix lemma) is what the
+# hash gate pins.
 # ----------------------------------------------------------------------
 @query("jaccard_prefix_longtail_pairs", oracle=r"""
 WITH d AS (
@@ -1371,19 +1382,19 @@ FROM r WHERE rank <= 5
 """)
 def streaming_ann_microbatch_topk(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
-    import tempfile
-
     from .llm.similarity import IVFIndex
     from .streaming.continuous import streaming_ann_topk_microbatch
 
     emb = load_table(spark, sf_dir, "embeddings")
     ivf = IVFIndex(n_centroids=4, n_probe=4, seed=2).fit(emb)
-    base = tempfile.mkdtemp(prefix="det_ann_mb_")   # fresh checkpoint
+    base = _scratch_dir(sf_dir, "ann_mb")
     probes = emb.filter(F.col("vec_id") < 8)
     # fixture staging is driver-side (bounded rows): a Spark write job
     # per few-KB fixture file is pure stage-launch overhead
-    _write_fixture(probes.filter(F.col("vec_id") < 4), f"{base}/in/a")
-    _write_fixture(probes.filter(F.col("vec_id") >= 4), f"{base}/in/b")
+    write_small_parquet(spark, probes.filter(F.col("vec_id") < 4),
+                        f"{base}/in/a")
+    write_small_parquet(spark, probes.filter(F.col("vec_id") >= 4),
+                        f"{base}/in/b")
     sdf = (spark.readStream.schema(probes.schema)
            .option("maxFilesPerTrigger", 1)
            .option("recursiveFileLookup", "true")
@@ -1395,7 +1406,6 @@ def streaming_ann_microbatch_topk(spark: SparkSession,
     out = (hits.select("probe_id", "rank", "neighbor_id",
                        F.round("sim", 6).alias("sim"))
            .localCheckpoint(eager=True))   # detach from the tmp files
-    import shutil
     shutil.rmtree(base, ignore_errors=True)
     return out
 
@@ -1425,18 +1435,14 @@ SELECT probe_id, CAST(rank AS INT) AS rank, neighbor_id,
 FROM r WHERE rank <= 5
 """)
 def streaming_ann_state_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from .llm.similarity import IVFIndex
     from .streaming.continuous import run_available_now, streaming_ann_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     ivf = IVFIndex(n_centroids=4, n_probe=4, seed=2).fit(emb)
-    base = tempfile.mkdtemp(prefix="det_ann_state_")
+    base = _scratch_dir(sf_dir, "ann_state")
     probes = emb.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
-    _write_fixture(probes, f"{base}/in")
+    write_small_parquet(spark, probes, f"{base}/in")
     sdf = (spark.readStream.schema(probes.schema)
            .option("maxFilesPerTrigger", 1).parquet(f"{base}/in"))
     got = run_available_now(
@@ -1482,10 +1488,6 @@ FROM p GROUP BY doc_id
 """)
 def streaming_near_dup_screen_stats(spark: SparkSession,
                                     sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from .streaming.continuous import (run_available_now,
                                        streaming_near_dup_hits)
 
@@ -1499,10 +1501,10 @@ def streaming_near_dup_screen_stats(spark: SparkSession,
     # the bucket table is materialized once and probed by every
     # micro-batch of the drain (stream-static join)
 
-    base = tempfile.mkdtemp(prefix="det_nd_screen_")
+    base = _scratch_dir(sf_dir, "nd_screen")
     # 2 part files = 2 micro-batches; the drained pair set is
     # batch-composition independent (append-mode distinct pairs)
-    _write_fixture(stream_docs, f"{base}/in", n_files=2)
+    write_small_parquet(spark, stream_docs, f"{base}/in", n_files=2)
     sdf = (spark.readStream.schema(stream_docs.schema)
            .option("maxFilesPerTrigger", 1).parquet(f"{base}/in"))
     # the drain emits CANDIDATE PAIRS (stream id, corpus id) — the
@@ -2515,8 +2517,6 @@ SELECT probe_id, CAST(rank AS INT) AS rank, neighbor_id,
 FROM r WHERE rank <= 5
 """)
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     import numpy as np
 
     from .llm.similarity import (IVFIndex, PQCodebook,
@@ -2538,14 +2538,17 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq = PQCodebook(m=64, k=17, normalize=False)
     pq.codebooks = np.tile(
         (np.arange(-8, 9) / 8.0).reshape(1, 17, 1), (64, 1, 1))
-    base = tempfile.mkdtemp(prefix="det_ivfpq_")
+    base = _scratch_dir(sf_dir, "ivfpq")
     raw, coded = base + "/raw", base + "/coded"
     ivf.write_corpus(q, raw, mode="overwrite")
     write_pq_corpus(q, ivf, pq, coded)
     res = ivf_pq_topk_from_corpus(
         spark, ivf, pq, coded, raw, q.filter("vec_id < 4"),
         k=5, shortlist=50)
-    return res.withColumn("sim", F.round("sim", 6))
+    out = (res.withColumn("sim", F.round("sim", 6))
+           .localCheckpoint(eager=True))   # detach from the tmp files
+    shutil.rmtree(base, ignore_errors=True)
+    return out
 
 
 # ----------------------------------------------------------------------
@@ -3536,15 +3539,9 @@ SELECT '__corrupt__', CAST(3 AS BIGINT),
        CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
 """)
 def jsonl_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from .sources.textio import read_jsonl_quarantine, write_jsonl
     docs = load_table(spark, sf_dir, "documents")
-    # PID-namespaced scratch: concurrent suite runs must not race on
-    # the write-then-read dataset
-    path = os.path.join(
-        f"/tmp/detanalysis_spark_textio_{os.getpid()}",
-        os.path.basename(os.path.normpath(sf_dir)) + "_docs_jsonl")
+    path = _scratch_dir(sf_dir, "docs_jsonl")
     write_jsonl(docs, path, compression="gzip")
     _LF(spark, 
         [("{\"doc_id\": 1, \"text\": truncated",),
@@ -3586,13 +3583,9 @@ SELECT '__corrupt__', CAST(2 AS BIGINT), CAST(NULL AS BIGINT),
        CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
 """)
 def csv_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from .sources.textio import read_csv_corpus
     docs = load_table(spark, sf_dir, "documents")
-    path = os.path.join(
-        f"/tmp/detanalysis_spark_textio_{os.getpid()}",
-        os.path.basename(os.path.normpath(sf_dir)) + "_docs_csv")
+    path = _scratch_dir(sf_dir, "docs_csv")
     (docs.select("doc_id", "text", "lang", "source", "n_chars")
          .write.mode("overwrite").option("header", "false")
          .option("quoteAll", "true").csv(path))
@@ -3742,15 +3735,9 @@ SELECT source, CAST(count(*) AS BIGINT) AS n_records,
 FROM documents GROUP BY source
 """)
 def wet_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from .sources.textio import read_wet, write_wet
     docs = load_table(spark, sf_dir, "documents")
-    path = os.path.join(
-        f"/tmp/detanalysis_spark_textio_{os.getpid()}",
-        os.path.basename(os.path.normpath(sf_dir)) + "_docs_wet")
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_dir(sf_dir, "docs_wet")
     tagged = docs.withColumn(
         "uri", F.concat(F.lit("https://"), F.col("source"),
                         F.lit(".example/d/"), F.col("doc_id")))
@@ -3789,15 +3776,10 @@ FROM documents WHERE doc_id < 200
 """)
 def wet_quarantine_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import gzip
-    import os
-    import shutil
 
     from .sources.textio import read_wet_quarantine, write_wet
     docs = load_table(spark, sf_dir, "documents").filter("doc_id < 200")
-    path = os.path.join(
-        f"/tmp/detanalysis_spark_textio_{os.getpid()}",
-        os.path.basename(os.path.normpath(sf_dir)) + "_docs_wetq")
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_dir(sf_dir, "docs_wetq")
     tagged = docs.withColumn(
         "uri", F.concat(F.lit("https://"), F.col("source"),
                         F.lit(".example/d/"), F.col("doc_id")))
@@ -3884,15 +3866,9 @@ SELECT 'txt', CAST(count(*) AS BIGINT),
 FROM documents
 """)
 def wds_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from .sources.wds import read_tar_shards, write_tar_shards
     docs = load_table(spark, sf_dir, "documents")
-    path = os.path.join(
-        f"/tmp/detanalysis_spark_textio_{os.getpid()}",
-        os.path.basename(os.path.normpath(sf_dir)) + "_docs_wds")
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_dir(sf_dir, "docs_wds")
     write_tar_shards(docs, path, "doc_id",
                      {"text": "txt", "source": "src"}, n_shards=4)
     back = read_tar_shards(spark, path)
@@ -3936,15 +3912,9 @@ SELECT source, CAST(status AS INT) AS http_status,
 FROM h GROUP BY source, status
 """)
 def warc_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from .sources.textio import read_warc, write_warc
     docs = load_table(spark, sf_dir, "documents")
-    path = os.path.join(
-        f"/tmp/detanalysis_spark_textio_{os.getpid()}",
-        os.path.basename(os.path.normpath(sf_dir)) + "_docs_warc")
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_dir(sf_dir, "docs_warc")
     v = (F.col("doc_id") % 3).cast("int")
     tagged = docs.select(
         F.concat(F.lit("https://"), F.col("source"),
@@ -4285,14 +4255,10 @@ SELECT event_type, CAST(count(*) AS BIGINT) AS n,
 FROM events GROUP BY event_type
 """)
 def compacted_scan_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from .sources.layout import compact_parquet_dir
     ev = load_table(spark, sf_dir, "events") \
         .select("event_id", "event_type", "value")
-    path = os.path.join(
-        f"/tmp/detanalysis_spark_textio_{os.getpid()}",
-        os.path.basename(os.path.normpath(sf_dir)) + "_events_small")
+    path = _scratch_dir(sf_dir, "events_small")
     ev.repartition(32).write.mode("overwrite").parquet(path)
     stats = compact_parquet_dir(spark, path, target_file_bytes=64 << 20)
     assert stats["files_after"] < stats["files_before"]
@@ -4334,14 +4300,10 @@ SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
 FROM merged GROUP BY o_orderstatus
 """)
 def upsert_merge_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from .sources.layout import cow_write, read_cow, upsert_parquet
     orders = load_table(spark, sf_dir, "orders") \
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
-    path = os.path.join(
-        f"/tmp/detanalysis_spark_textio_{os.getpid()}",
-        os.path.basename(os.path.normpath(sf_dir)) + "_orders_cow")
+    path = _scratch_dir(sf_dir, "orders_cow")
     cow_write(orders, path, "o_orderkey", num_buckets=8)
     upd = (orders.filter(F.col("o_orderkey") % 10 == 3)
            .select("o_orderkey", F.lit("U").alias("o_orderstatus"),
@@ -4391,19 +4353,12 @@ SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
 FROM merged GROUP BY o_orderstatus
 """)
 def streaming_upsert_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from .sources.layout import cow_write, read_cow
     from .streaming import streaming_upsert
     orders = load_table(spark, sf_dir, "orders") \
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
-    base_dir = os.path.join(
-        f"/tmp/detanalysis_spark_textio_{os.getpid()}",
-        os.path.basename(os.path.normpath(sf_dir)) + "_orders_scow")
-    path, ckpt = base_dir + "_table", base_dir + "_ckpt"
-    for d in (path, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
+    path = _scratch_dir(sf_dir, "orders_scow_table")
+    ckpt = _scratch_dir(sf_dir, "orders_scow_ckpt")
     # 4 buckets: the update batch touches every bucket at this scale
     # anyway (keys are uniform), so extra buckets only multiply the
     # fixed per-bucket rename/commit jobs the query wall is made of
@@ -4746,12 +4701,9 @@ FROM orders WHERE o_totalprice > 1000.0
 GROUP BY o_orderstatus
 """)
 def orc_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     orders = load_table(spark, sf_dir, "orders") \
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
-    path = os.path.join(
-        f"/tmp/detanalysis_spark_textio_{os.getpid()}",
-        os.path.basename(os.path.normpath(sf_dir)) + "_orders_orc")
+    path = _scratch_dir(sf_dir, "orders_orc")
     orders.write.mode("overwrite").option("compression", "zlib").orc(path)
     back = spark.read.orc(path).filter(F.col("o_totalprice") > 1000.0)
     return (back.groupBy("o_orderstatus")
@@ -4787,9 +4739,6 @@ SELECT CAST(series_number AS BIGINT) AS series_number, chan AS channel,
 FROM x GROUP BY series_number, chan
 """)
 def trace_hdf5_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from .sources.hdf5 import _require_h5py, load_trace_hdf5
     h5py = _require_h5py()
 
@@ -4797,10 +4746,7 @@ def trace_hdf5_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
           .filter(F.col("event_id") < 64)
           .select("event_id", F.round("value", 3).alias("v"))
           .collect())                      # bounded: < 64 rows
-    base = os.path.join(
-        f"/tmp/detanalysis_spark_textio_{os.getpid()}",
-        os.path.basename(os.path.normpath(sf_dir)) + "_trace_h5")
-    shutil.rmtree(base, ignore_errors=True)
+    base = _scratch_dir(sf_dir, "trace_h5")
     os.makedirs(base)
     for s in (1, 2):
         with h5py.File(os.path.join(base, f"series_{s}.hdf5"), "w") as f:
@@ -5960,17 +5906,10 @@ FROM events
 WHERE value >= 20.0 AND value <= 40.0
 """)
 def manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     from .sources.layout import zorder_write, pruned_parquet
     events = load_table(spark, sf_dir, "events") \
         .select("event_id", "user_id", "event_type", "value")
-    # namespaced by PID: two sessions running the suite concurrently
-    # must not race on the write-then-read scratch dataset (one
-    # session's zorder overwrite would delete files under the other's
-    # manifest read)
-    path = os.path.join(
-        f"/tmp/detanalysis_spark_layout_{os.getpid()}",
-        os.path.basename(os.path.normpath(sf_dir)) + "_events")
+    path = _scratch_dir(sf_dir, "events")
     zorder_write(events, ["value", "user_id"], path, n_files=8)
     pruned = pruned_parquet(spark, path, {"value": (20.0, 40.0)})
     return (pruned.filter((F.col("value") >= 20.0)
@@ -6402,7 +6341,7 @@ def fuzzy_join_typos(spark: SparkSession, sf_dir: str) -> DataFrame:
 # measured-crossover threshold — this corpus) or the two-pass
 # Misra–Gries plan whose token tail never shuffles (web-scale vocab).
 # Both plans are exact, so the plain groupBy-HAVING oracle gates
-# either; tools/crossover_probe.py measures where they cross.
+# either; CROSSOVER.json records where they cross.
 # ----------------------------------------------------------------------
 @query("heavy_hitter_tokens", oracle=r"""
 WITH t AS (
@@ -6493,16 +6432,16 @@ FROM r
 """)
 def streaming_rollup_day_stats(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    import tempfile
-
     from .operators.rollup import finalize_rollup
     from .streaming.continuous import (read_rollup_from_deltas,
                                        streaming_rollup_deltas)
 
     ev = load_table(spark, sf_dir, "events")
-    base = tempfile.mkdtemp(prefix="det_roll_mb_")  # fresh checkpoint
-    _write_fixture(ev.filter(F.col("event_id") % 2 == 0), f"{base}/in/a")
-    _write_fixture(ev.filter(F.col("event_id") % 2 == 1), f"{base}/in/b")
+    base = _scratch_dir(sf_dir, "roll_mb")
+    write_small_parquet(spark, ev.filter(F.col("event_id") % 2 == 0),
+                        f"{base}/in/a")
+    write_small_parquet(spark, ev.filter(F.col("event_id") % 2 == 1),
+                        f"{base}/in/b")
     sdf = (spark.readStream.schema(ev.schema)
            .option("maxFilesPerTrigger", 1)
            .option("recursiveFileLookup", "true")
@@ -6518,7 +6457,6 @@ def streaming_rollup_day_stats(spark: SparkSession,
                       F.round("mn", 6).alias("mn"),
                       F.round("mx", 6).alias("mx"))
            .localCheckpoint(eager=True))   # detach from the tmp files
-    import shutil
     shutil.rmtree(base, ignore_errors=True)
     return out
 
@@ -6670,8 +6608,6 @@ SELECT CAST(bin AS DOUBLE) AS frequency_hz,
 FROM prod GROUP BY bin
 """)
 def streaming_cross_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql.types import StructType, TimestampNTZType
 
     from .streaming import (read_cross_moments_from_deltas,
@@ -6691,7 +6627,7 @@ def streaming_cross_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.struct(F.lit("b").alias("channel"), xb.alias("trace"))))
              .alias("p"))
          .select("event_id", "p.channel", "p.trace"))
-    base = tempfile.mkdtemp(prefix="det_cross_")
+    base = _scratch_dir(sf_dir, "cross")
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -6707,8 +6643,11 @@ def streaming_cross_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = ["S_re__a__a", "S_re__a__b", "S_im__a__b", "S_re__b__a",
             "S_im__b__a", "S_re__b__b", "R__a__a", "R__a__b",
             "R__b__b"]
-    return m.select("frequency_hz", "n",
+    out = (m.select("frequency_hz", "n",
                     *[F.round(c, 6).alias(c) for c in cols])
+           .localCheckpoint(eager=True))   # detach from the tmp files
+    shutil.rmtree(base, ignore_errors=True)
+    return out
 
 
 # ----------------------------------------------------------------------

@@ -7,9 +7,9 @@ costs ~4.5 s PER CALL in a 32-core local session even for ONE row
 (measured round 10; the cost recurs on every call, it is not a
 one-off warm-up). The pandas/Arrow path instead embeds the rows as a
 plan-local relation: ~0.2 s, no Python workers at execution. Every
-small literal frame in the engine's hot paths (PSL rule tables, COW
-meta sidecars, driver-computed offsets, oracle-query result frames)
-goes through here.
+small literal frame in the engine's hot paths (PSL rule tables,
+driver-computed offsets, oracle-query result frames, the Spark
+fallback of ``write_small_parquet``) goes through here.
 """
 from __future__ import annotations
 
@@ -127,95 +127,58 @@ def _split_ddl(schema: str) -> list[str]:
     return out
 
 
-def write_sidecar_parquet(spark: SparkSession, rows, schema: str,
-                          path: str) -> None:
-    """Write a small (one-to-few-row) parquet sidecar table — meta
-    rows pinning index/table parameters (``_lsh_meta``, ``_cow_meta``,
-    BPE/LM meta, saved model weights).
+# row bound of a driver-side write: a DataFrame is collected through
+# ``limit(bound + 1)``, so a larger result never reaches the driver
+_LOCAL_WRITE_MAX_ROWS = 2_000_000
 
-    For a plain LOCAL path the file is written driver-side via
-    pyarrow: a Spark ``coalesce(1).write`` of one row costs a whole
-    job (~0.4 s of stage launch + commit protocol per call, measured
-    round 12) for ~100 bytes of payload, and these sidecars are
-    written inside hot builder paths (every COW table create, every
-    LSH index build, every streaming-upsert micro-batch). The
-    directory layout matches a Spark write (a single part file inside
-    the directory) so ``spark.read.parquet`` sees the same table
-    either way. Paths with a scheme (hdfs://, s3a://, file://) and any
-    conversion surprise fall back to the Spark writer — the documented
-    "lands on whatever filesystem the session targets" property of the
-    persisted-artifact APIs is preserved exactly where it matters.
+
+def write_small_parquet(spark: SparkSession, data, path: str,
+                        schema: str | None = None,
+                        n_files: int = 1) -> None:
+    """Write a small table as a parquet directory, driver-side when the
+    path is local.
+
+    ``data`` is either literal rows (a sequence of tuples with DDL
+    ``schema``) — the meta sidecars pinning index/table parameters
+    (``_lsh_meta``, ``_cow_meta``, BPE/LM meta, saved model weights) —
+    or a BOUNDED DataFrame — the input files a streaming suite query
+    stages per run. A Spark ``coalesce(n).write`` of either costs a
+    whole job (~0.3-0.4 s of stage launch + commit protocol per call,
+    measured round 12) for a few KB of payload, inside hot builder
+    paths (every COW table create, every LSH index build, every
+    streaming-upsert micro-batch) and timed queries.
+
+    For a plain LOCAL path the Arrow table is built on the driver —
+    literal rows through a DDL → Arrow type map (no Spark job at all),
+    a DataFrame through a bounded ``limit(N + 1).toArrow()``, which
+    keeps Spark's physical parquet types (timestamps keep their
+    LTZ/NTZ adjustment, arrays stay lists) — and written with pyarrow
+    as ``n_files`` contiguous slices, one part file each (the
+    micro-batch boundaries of a ``maxFilesPerTrigger=1`` drain). The
+    layout matches a Spark write, so ``spark.read.parquet`` sees the
+    same table either way.
+
+    One fallback rule: a path with a scheme (hdfs://, s3a://,
+    file://), more than ``_LOCAL_WRITE_MAX_ROWS`` rows, or any
+    conversion error (e.g. a DDL type the map lacks) goes to the Spark
+    writer — persisted artifacts land on whatever filesystem the
+    session targets.
     """
-    rows = list(rows)
-    local = "://" not in path and rows
-    if local:
-        try:
-            import shutil
-
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-            types = {
-                "int": pa.int32(), "integer": pa.int32(),
-                "smallint": pa.int16(), "tinyint": pa.int8(),
-                "long": pa.int64(), "bigint": pa.int64(),
-                "float": pa.float32(), "double": pa.float64(),
-                "string": pa.string(), "boolean": pa.bool_(),
-                "binary": pa.binary(),
-            }
-            fields = []
-            for f in _split_ddl(schema):
-                parts = f.split()
-                name, typ = parts[0].strip("`"), parts[-1].lower()
-                fields.append(pa.field(name, types[typ]))  # KeyError → fallback
-            arrays = [pa.array([r[i] for r in rows], type=fld.type)
-                      for i, fld in enumerate(fields)]
-            table = pa.Table.from_arrays(arrays, schema=pa.schema(fields))
-            shutil.rmtree(path, ignore_errors=True)
-            import os
-            os.makedirs(path, exist_ok=True)
-            pq.write_table(table, os.path.join(path, "part-00000.parquet"))
-            return
-        except Exception:   # noqa: BLE001 — correctness first
-            pass
-    (local_frame(spark, rows, schema)
-     .coalesce(1).write.mode("overwrite").parquet(path))
-
-
-def write_local_fixture_parquet(df: DataFrame, path: str,
-                                n_files: int = 1,
-                                max_rows: int = 2_000_000) -> None:
-    """Materialize a BOUNDED DataFrame as a local parquet directory
-    driver-side (Arrow collect + pyarrow write) — the fixture-staging
-    sibling of :func:`write_sidecar_parquet`.
-
-    Streaming suite queries stage their input files per run (a file
-    stream source needs a directory); a Spark ``coalesce(n).write`` of
-    a few-KB fixture costs a full job (~0.3-0.4 s stage launch +
-    commit protocol, measured round 12) per write, inside the timed
-    query. ``df.toArrow()`` preserves Spark's physical parquet types
-    (timestamps keep their LTZ/NTZ adjustment, arrays stay lists), so
-    ``spark.read``/``readStream`` with the original schema sees the
-    identical table. ``n_files`` contiguous slices land as separate
-    part files — the micro-batch boundaries of a
-    ``maxFilesPerTrigger=1`` drain; callers use this ONLY where the
-    drained result is batch-composition independent.
-
-    Scheme'd paths (hdfs://, s3a://), results larger than ``max_rows``
-    (the collect is bounded by ``limit`` BEFORE it reaches the
-    driver), and any conversion surprise fall back to the plain Spark
-    writer.
-    """
+    is_frame = isinstance(data, DataFrame)
+    if not is_frame:
+        data = list(data)
+    n = max(1, int(n_files))
     if "://" not in path:
         try:
             import os
             import shutil
 
             import pyarrow.parquet as pq
-            tbl = df.limit(max_rows + 1).toArrow()
-            if tbl.num_rows <= max_rows:
+            tbl = (data.limit(_LOCAL_WRITE_MAX_ROWS + 1).toArrow()
+                   if is_frame else _ddl_arrow_table(data, schema))
+            if tbl.num_rows <= _LOCAL_WRITE_MAX_ROWS:
                 shutil.rmtree(path, ignore_errors=True)
                 os.makedirs(path, exist_ok=True)
-                n = max(1, int(n_files))
                 step = max(1, -(-tbl.num_rows // n))
                 for i in range(n):
                     pq.write_table(
@@ -224,4 +187,26 @@ def write_local_fixture_parquet(df: DataFrame, path: str,
                 return
         except Exception:   # noqa: BLE001 — correctness first
             pass
-    df.coalesce(max(1, int(n_files))).write.mode("overwrite").parquet(path)
+    df = data if is_frame else local_frame(spark, data, schema)
+    df.coalesce(n).write.mode("overwrite").parquet(path)
+
+
+def _ddl_arrow_table(rows: list, schema: str):
+    """Literal rows as a pyarrow Table typed by a flat DDL column list;
+    a type outside the map raises KeyError."""
+    import pyarrow as pa
+    types = {
+        "int": pa.int32(), "integer": pa.int32(),
+        "smallint": pa.int16(), "tinyint": pa.int8(),
+        "long": pa.int64(), "bigint": pa.int64(),
+        "float": pa.float32(), "double": pa.float64(),
+        "string": pa.string(), "boolean": pa.bool_(),
+        "binary": pa.binary(),
+    }
+    fields = []
+    for f in _split_ddl(schema):
+        parts = f.split()
+        fields.append(pa.field(parts[0].strip("`"), types[parts[-1].lower()]))
+    arrays = [pa.array([r[i] for r in rows], type=fld.type)
+              for i, fld in enumerate(fields)]
+    return pa.Table.from_arrays(arrays, schema=pa.schema(fields))

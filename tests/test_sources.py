@@ -1133,16 +1133,55 @@ def test_tar_shards_roundtrip_and_determinism(spark, tmp_path):
         write_tar_shards(df, p1, "k", {"text": "txt"}, mode="error")
 
 
-def test_write_local_fixture_parquet_roundtrip(spark, tmp_path):
-    """Driver-side fixture staging must read back identically to a
+def test_write_local_fixture_parquet_roundtrip(spark, tmp_path,
+                                               monkeypatch):
+    """The one small-file writer (``util.write_small_parquet``).
+
+    DataFrame input (fixture staging) must read back identically to a
     Spark write: same rows, same schema (timestamps keep their LTZ
     adjustment, arrays stay arrays), and exactly n_files part files
-    (the micro-batch boundaries of a maxFilesPerTrigger=1 drain)."""
+    (the micro-batch boundaries of a maxFilesPerTrigger=1 drain).
+    Literal-row input (meta sidecars) on a local path runs no Spark
+    job at all. Each leg of the single fallback rule — a scheme'd
+    path, a DDL type outside the Arrow map, an over-bound input —
+    takes the Spark writer and reads back the same table."""
     import glob
+    import time
+    import uuid
 
+    import pyarrow as pa
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from detanalysis_spark.util import write_local_fixture_parquet
+    from detanalysis_spark import util
+    from detanalysis_spark.util import write_small_parquet
+
+    sc = spark.sparkContext
+
+    def jobs_of(fn):
+        """Spark jobs ``fn`` launched. The status store fills from the
+        listener bus, in order: once a marker job started after ``fn``
+        is visible, so is every job ``fn`` started."""
+        group, marker = (f"writer_{uuid.uuid4().hex[:8]}_{k}"
+                         for k in ("fn", "marker"))
+        try:
+            sc.setJobGroup(group, group)
+            fn()
+            sc.setJobGroup(marker, marker)
+            spark.range(1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        for _ in range(100):
+            if tracker.getJobIdsForGroup(marker):
+                break
+            time.sleep(0.05)
+        return len(tracker.getJobIdsForGroup(group))
+
+    def table(path):
+        back = spark.read.parquet(path)
+        return ([(f.name, f.dataType) for f in back.schema],
+                sorted(map(tuple, back.collect())))
 
     df = spark.range(0, 97).select(
         F.col("id"),
@@ -1154,23 +1193,50 @@ def test_write_local_fixture_parquet_roundtrip(spark, tmp_path):
         .alias("ts"))
 
     p = str(tmp_path / "fx")
-    write_local_fixture_parquet(df, p, n_files=2)
+    write_small_parquet(spark, df, p, n_files=2)
     assert len(glob.glob(p + "/part-*.parquet")) == 2
-    back = spark.read.parquet(p)
     # nullability flips on ANY parquet roundtrip (Spark write too);
     # names + types are the contract the readStream schemas rely on
-    assert [(f.name, f.dataType) for f in back.schema] \
-        == [(f.name, f.dataType) for f in df.schema]
-    assert sorted(map(tuple, back.collect())) == \
-        sorted(map(tuple, df.collect()))
+    assert table(p) == ([(f.name, f.dataType) for f in df.schema],
+                        sorted(map(tuple, df.collect())))
 
     # over-bound results fall back to the Spark writer (still correct)
+    monkeypatch.setattr(util, "_LOCAL_WRITE_MAX_ROWS", 10)
     p2 = str(tmp_path / "fx2")
-    write_local_fixture_parquet(df, p2, n_files=1, max_rows=10)
-    back2 = spark.read.parquet(p2)
-    assert back2.count() == 97
+    write_small_parquet(spark, df, p2)
+    assert glob.glob(p2 + "/_SUCCESS")      # the Spark commit protocol
+    assert table(p2) == table(p)
+    monkeypatch.undo()
 
     # empty frame: schema-preserving empty part files
     p3 = str(tmp_path / "fx3")
-    write_local_fixture_parquet(df.filter("id < 0"), p3, n_files=2)
+    write_small_parquet(spark, df.filter("id < 0"), p3, n_files=2)
     assert spark.read.parquet(p3).count() == 0
+
+    # literal sidecar rows, local path: zero Spark jobs, DDL types kept
+    rows = [(1, 2 ** 40, 0.5, "a"), (-3, -(2 ** 40), -1.25, "b,c")]
+    ddl = "i int, l long, d double, s string"
+    p4 = str(tmp_path / "side")
+    assert jobs_of(lambda: write_small_parquet(spark, rows, p4, ddl)) == 0
+    assert pq.read_table(p4).schema.types == [
+        pa.int32(), pa.int64(), pa.float64(), pa.string()]
+    assert table(p4)[1] == sorted(rows)
+
+    # a file:// path takes the Spark writer: same rows and schema
+    p5 = str(tmp_path / "side_uri")
+    assert jobs_of(lambda: write_small_parquet(
+        spark, rows, "file://" + p5, ddl)) > 0
+    assert glob.glob(p5 + "/_SUCCESS")
+    assert table(p5) == table(p4)
+
+    # a DDL type outside the Arrow map (timestamp) takes it too
+    import datetime as dt
+    ts_rows = [(1, dt.datetime(2024, 1, 2, 3, 4, 5))]
+    p6 = str(tmp_path / "side_ts")
+    assert jobs_of(lambda: write_small_parquet(
+        spark, ts_rows, p6, "id long, ts timestamp")) > 0
+    assert glob.glob(p6 + "/_SUCCESS")
+    assert table(p6) == ([(f.name, f.dataType) for f in
+                          spark.createDataFrame(
+                              ts_rows, "id long, ts timestamp").schema],
+                         ts_rows)

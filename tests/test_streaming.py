@@ -907,13 +907,14 @@ def test_streaming_cross_deltas_replay_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: applying the SAME batch id twice
     (the crash-replay shape — parquet write committed, checkpoint not)
     must leave the merged moments unchanged, not double-weight the
-    batch (VERDICT r11 #1). The per-batch write lands in the batch's
-    own __batch_id__ partition with dynamic overwrite."""
+    batch (VERDICT r11 #1). The per-batch write is stream_to_parquet's
+    sink: the batch's own __batch_id__ partition, dynamic overwrite.
+    The replays below call that sink's foreachBatch function."""
     import numpy as np
     from detanalysis_spark import vibration as V
     from detanalysis_spark.streaming import read_cross_moments_from_deltas
     from detanalysis_spark.streaming.continuous import (
-        _write_cross_delta_batch)
+        _cross_delta_batch, _partitioned_batch_writer)
 
     FS2, CHUNK2 = 1000.0, 32
     rng = np.random.default_rng(11)
@@ -931,15 +932,17 @@ def test_streaming_cross_deltas_replay_idempotent(spark, tmp_path):
 
     b0, b1 = chunk_frame(0, 4), chunk_frame(4, 4)
     sink = str(tmp_path / "deltas")
-    _write_cross_delta_batch(b0, 0, channels, FS2, sink)
-    _write_cross_delta_batch(b1, 1, channels, FS2, sink)
+    apply_batch = _partitioned_batch_writer(
+        lambda b, _id: _cross_delta_batch(b, channels, FS2), sink)
+    apply_batch(b0, 0)
+    apply_batch(b1, 1)
     merged = read_cross_moments_from_deltas(spark, sink, channels,
                                             FS2, CHUNK2)
     key = lambda r: int(r["frequency_hz"] / (FS2 / CHUNK2) + 0.5)
     before = {key(r): r.asDict() for r in merged.collect()}
 
     # replay batch 1 (same id, same data) — merged moments unchanged
-    _write_cross_delta_batch(b1, 1, channels, FS2, sink)
+    apply_batch(b1, 1)
     after = {key(r): r.asDict()
              for r in read_cross_moments_from_deltas(
                  spark, sink, channels, FS2, CHUNK2).collect()}
@@ -956,6 +959,55 @@ def test_streaming_cross_deltas_replay_idempotent(spark, tmp_path):
     import os
     parts = [d for d in os.listdir(sink) if d.startswith("__batch_id__=")]
     assert sorted(parts) == ["__batch_id__=0", "__batch_id__=1"]
+
+
+def test_drain_timeout_stops_query(spark, tmp_path):
+    """The shared AvailableNow drain's fallback: a backlog that does not
+    drain within timeout_sec raises TimeoutError naming the query, and
+    the query is stopped (not left running to race its reader)."""
+    import time
+
+    from pyspark.sql.types import LongType
+
+    src = str(tmp_path / "in")
+    spark.range(4).coalesce(1).write.parquet(src)
+
+    @F.udf(LongType())
+    def slow(x):
+        time.sleep(4)
+        return x
+
+    sdf = spark.readStream.schema("id long").parquet(src)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(TimeoutError, match="drain_timeout_t"):
+        run_available_now(sdf.select(slow("id").alias("id")),
+                          "drain_timeout_t", output_mode="append",
+                          timeout_sec=1, shuffle_partitions=3)
+    assert all(q.name != "drain_timeout_t" for q in spark.streams.active)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == old
+
+
+def test_suite_scratch_queries_leave_no_dir(spark, sf_dir):
+    """Suite queries that stage files in a scratch dir detach their
+    result (eager local checkpoint) and remove the dir before
+    returning: calling them leaves nothing behind in the temp dir."""
+    import glob
+    import os
+    import tempfile
+
+    from detanalysis_spark.suite import QUERIES
+
+    tmp = tempfile.gettempdir()
+
+    def scratch():
+        return set(glob.glob(os.path.join(tmp, "det_*"))
+                   + glob.glob(os.path.join(
+                       tmp, f"detanalysis_spark_{os.getpid()}", "*")))
+
+    before = scratch()
+    for name in ("ann_ivf_pq_topk", "streaming_cross_stats"):
+        assert QUERIES[name](spark, sf_dir).collect(), name
+    assert scratch() == before
 
 
 def test_lineage_id_uri_and_relative_paths(tmp_path, monkeypatch):
