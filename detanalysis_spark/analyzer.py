@@ -21,6 +21,22 @@ Scale notes (100 TB):
 - NumPy-mask cuts (P2) become joins on ``__event_index__`` against a
   small flag DataFrame — no driver-side full-column materialization.
 
+Range memo (the Vaex result cache, analyzer.py:71-72, for the one
+statistic every edge, limit, fit and pick needs): ``df_full`` and ``df``
+return the same DataFrame object until their state changes, and each
+such view carries a ``{column: (min, max)}`` memo
+(``operators.stats.column_ranges``). The first range a view is asked
+for costs one aggregate that also fetches every stored numeric column
+(never a registered feature, so no UDF runs speculatively); every later
+range on that view object is free. ``register_feature`` gives a new
+``df_full`` that keeps the stored columns' ranges; a global-filter
+change gives a new ``df`` with an empty memo; replacing the master
+(``add_files``) drops every range. Non-deterministic and streaming
+views are never memoized. The memo is per view object, so nothing hits
+across two Analyzers or two loads of the same files, and a live
+DataFrame whose files are rewritten in place must be re-read (a new
+Analyzer) to see the new ranges.
+
 Reference parity citations are given per method (file:line into
 /root/reference/detanalysis/analyzer.py).
 """
@@ -34,7 +50,11 @@ from typing import Any, Callable, Iterable, Mapping, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .operators.stats import known_ranges, memoize_ranges
+
 EVENT_INDEX = "__event_index__"
+
+_NUM_TYPES = ("double", "float", "bigint", "int", "smallint", "tinyint")
 
 _FILTER_MODES = ("replace", "and", "or", "xor", "subtract")
 
@@ -154,7 +174,7 @@ class Analyzer:
         The reference re-numbers the concatenated frame
         (analyzer.py:563-565); here appended rows get ids offset past
         ``max(existing)+1`` — existing ids are untouched, so registered
-        id-based cuts stay valid (one tiny agg job per append).
+        id-based cuts stay valid (one tiny aggregate per append).
         Registered cuts/features survive (they are expressions, not data).
         """
         self._ensure_ids()
@@ -172,7 +192,9 @@ class Analyzer:
         """Reload/reset (S5, analyzer.py:526-537): drop cuts, features,
         filter, and the temp views mask cuts registered."""
         self._cuts.clear()
+        before = set(self._features)
         self._features.clear()
+        self._features_changed(before)
         self._drop_cut_views()
         self.drop_global_filter()
         return self
@@ -183,7 +205,7 @@ class Analyzer:
     @property
     def nevents(self) -> int:
         """Row count of the working (filtered) view (analyzer.py:94-96).
-        Triggers one count job — Spark has no cached len()."""
+        Triggers one count action — Spark has no cached len()."""
         return self.df.count()
 
     @property
@@ -223,8 +245,44 @@ class Analyzer:
         return info.metadata.get("unit") if info is not None else None
 
     # ------------------------------------------------------------------
-    # views
+    # views (each one object with one range memo, see module docstring)
     # ------------------------------------------------------------------
+    @property
+    def _df_full(self) -> DataFrame:
+        """The master DataFrame (no features, no filter)."""
+        return self._master
+
+    @_df_full.setter
+    def _df_full(self, df: DataFrame) -> None:
+        # new data: both views and every known range start over
+        self._master = df
+        self._views: dict[str, DataFrame] = {}
+        self._carried: dict[str, dict] = {}
+
+    def _features_changed(self, before: set[str]) -> None:
+        """Same rows, other columns: both views are rebuilt on next use,
+        and the new ``df_full`` keeps the known ranges of stored columns
+        that no feature shadowed before or shadows now."""
+        full = self._views.get("full")
+        known = (known_ranges(full) if full is not None
+                 else self._carried.get("full")) or {}
+        skip = before | set(self._features)
+        stored = set(self._master.columns)
+        self._carried = {"full": {c: r for c, r in known.items()
+                                  if c in stored and c not in skip}}
+        self._views = {}
+
+    def _view(self, key: str, build: Callable[[], DataFrame]) -> DataFrame:
+        """The cached view ``key``, built and memoized on first use."""
+        view = self._views.get(key)
+        if view is None:
+            view = self._views[key] = build()
+            memoize_ranges(view, [c for c, t in self._master.dtypes
+                                  if t in _NUM_TYPES
+                                  and c not in self._features],
+                           self._carried.pop(key, {}))
+        return view
+
     @property
     def df_full(self) -> DataFrame:
         """Master view with registered features attached lazily.
@@ -234,19 +292,22 @@ class Analyzer:
         costs nothing (same laziness as Vaex virtual columns,
         analyzer.py:474).
         """
-        df = self._df_full
-        if self._features:
-            df = df.withColumns({n: f.column for n, f in self._features.items()})
-        return df
+        def build() -> DataFrame:
+            if not self._features:
+                return self._master
+            return self._master.withColumns(
+                {n: f.column for n, f in self._features.items()})
+        return self._view("full", build)
 
     @property
     def df(self) -> DataFrame:
         """Working view = master filtered by the global filter
-        (analyzer.py:267-286 ``_refresh_df_view``). Lazy — no copy."""
-        base = self.df_full
-        if self._global_filter is not None:
-            base = base.filter(self._global_filter)
-        return base
+        (analyzer.py:267-286 ``_refresh_df_view``). Lazy — no copy; with
+        no filter it is ``df_full`` itself."""
+        if self._global_filter is None:
+            return self.df_full
+        return self._view("filtered",
+                          lambda: self.df_full.filter(self._global_filter))
 
     # ------------------------------------------------------------------
     # predicate resolution (P1/P2)
@@ -431,7 +492,9 @@ class Analyzer:
         col = F.expr(expression) if isinstance(expression, str) else expression
         info = FeatureInfo(name=name, expression=expression if isinstance(expression, str) else None,
                            column=col, metadata=dict(metadata or {}))
+        before = set(self._features)
         self._features[name] = info
+        self._features_changed(before)
         return info
 
     def get_features(self) -> dict[str, FeatureInfo]:
@@ -511,6 +574,7 @@ class Analyzer:
             raise ValueError(f"mode must be one of {_FILTER_MODES}")
         new = self.resolve_cut(cut)
         cur = self._global_filter
+        self._views.pop("filtered", None)
         if cur is None or mode == "replace":
             self._global_filter = new
             self._global_filter_desc = [str(cut)]
@@ -528,6 +592,7 @@ class Analyzer:
             self._global_filter_desc.append(f"AND NOT {cut}")
 
     def drop_global_filter(self) -> None:
+        self._views.pop("filtered", None)
         self._global_filter = None
         self._global_filter_desc = []
 
@@ -572,12 +637,12 @@ class Analyzer:
 
     def describe(self, columns: Sequence[str] | None = None) -> "Any":
         """Column stats (analyzer.py:116-133): one distributed agg pass
-        computing count/mean/std/min/max for every numeric column —
-        single job, map-side combined, no per-column scans."""
+        computing count/mean/std/min/max for every numeric column — one
+        action, map-side combined, no per-column scans. The min/max it
+        computes anyway go into the view's range memo."""
         df = self.df
-        num_types = ("double", "float", "bigint", "int", "smallint", "tinyint", "long")
         cols = [c for c, t in df.dtypes
-                if (columns is None or c in columns) and t in num_types]
+                if (columns is None or c in columns) and t in _NUM_TYPES]
         aggs = []
         for c in cols:
             aggs += [F.count(c).alias(f"{c}__count"), F.avg(c).alias(f"{c}__mean"),
@@ -587,6 +652,9 @@ class Analyzer:
         import pandas as pd
         out = {c: {s: row[f"{c}__{s}"] for s in ("count", "mean", "std", "min", "max")}
                for c in cols}
+        known = known_ranges(df)
+        if known is not None:
+            known.update((c, (out[c]["min"], out[c]["max"])) for c in cols)
         return pd.DataFrame(out)
 
     def get_event_list(self, cut: Any = None, nb_events_limit: int = 5000,

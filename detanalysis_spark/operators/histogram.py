@@ -2,7 +2,8 @@
 
 Reference: ``Analyzer.hist`` / ``Analyzer.heatmap``
 (analyzer.py:579-662, 664-715) delegate to Vaex's binned count engine.
-Spark-first shape: an optional min/max pass for limits, then ONE shuffle
+Spark-first shape: an optional min/max pass for limits (none when an
+Analyzer view's range memo already knows the column), then ONE shuffle
 — ``groupBy(bucket).count()`` — returning only ``shape`` rows to the
 driver. At 100 TB the agg is map-side combined, so the shuffle carries
 at most ``shape × partitions`` rows regardless of input size.
@@ -18,14 +19,26 @@ from typing import Any, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .stats import column_ranges
 
-def _limits(df: DataFrame, col: Column, limits: Any) -> tuple[float, float]:
-    """Resolve 'minmax' / explicit [lo, hi] limits (analyzer.py:595)."""
+
+def resolve_limits(df: DataFrame, expression: str | Column,
+                   limits: Any) -> tuple[float, float]:
+    """Resolve 'minmax' / explicit [lo, hi] limits (analyzer.py:595);
+    an empty range widens to [lo, lo + 1]. 'minmax' of a column name
+    reads the view's range memo (``stats.column_ranges``); any other
+    expression runs its own min/max aggregate."""
     if limits is None or (isinstance(limits, str) and limits == "minmax"):
-        row = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
-        return float(row["lo"]), float(row["hi"])
-    lo, hi = limits
-    return float(lo), float(hi)
+        if isinstance(expression, str) and expression in df.columns:
+            lo, hi = column_ranges(df, [expression])[0]
+        else:
+            col = F.expr(expression) if isinstance(expression, str) \
+                else expression
+            lo, hi = df.agg(F.min(col), F.max(col)).collect()[0]
+    else:
+        lo, hi = limits
+    lo, hi = float(lo), float(hi)
+    return lo, (lo + 1.0 if hi == lo else hi)
 
 
 def bucket_expr(col: Column, lo: float, hi: float, shape: int) -> Column:
@@ -34,6 +47,15 @@ def bucket_expr(col: Column, lo: float, hi: float, shape: int) -> Column:
     w = (hi - lo) / shape
     raw = F.floor((col - F.lit(lo)) / F.lit(w)).cast("int")
     return F.when(col == F.lit(hi), F.lit(shape - 1)).otherwise(raw)
+
+
+def bucket_agg(df: DataFrame, col: Column, lo: float, hi: float,
+               shape: int, *aggs: Column) -> DataFrame:
+    """``(bucket, *aggs)`` over the non-NULL rows inside [lo, hi] — the
+    one bucket-keyed aggregate behind every 1-D histogram here."""
+    return (df.filter(col.isNotNull() & (col >= lo) & (col <= hi))
+              .groupBy(bucket_expr(col, lo, hi, shape).alias("bucket"))
+              .agg(*aggs))
 
 
 def what_agg(what: str) -> Column:
@@ -64,19 +86,17 @@ def hist1d(df: DataFrame, expression: str | Column, shape: int = 64,
     grammar: ``count(*)``, ``mean(expr)``, …) — a binned-statistic
     operator, still ONE bucket-keyed aggregate. ``normalize`` (only
     with counts) divides by total·bin_width — np.histogram
-    ``density=True`` parity. Two jobs max: limits agg (skipped when
-    explicit) + bucket groupBy.
+    ``density=True`` parity. Two actions at most (each 2 Spark jobs
+    under AQE): the limits aggregate — skipped when the limits are
+    explicit or the view's range memo knows them — and the bucket
+    groupBy.
     """
     import numpy as np
 
     col = F.expr(expression) if isinstance(expression, str) else expression
-    lo, hi = _limits(df, col, limits)
-    if hi == lo:
-        hi = lo + 1.0
-    b = bucket_expr(col, lo, hi, shape)
-    agg = what_agg(what).alias("count")
-    rows = (df.filter(col.isNotNull() & (col >= lo) & (col <= hi))
-              .groupBy(b.alias("bucket")).agg(agg).collect())
+    lo, hi = resolve_limits(df, expression, limits)
+    rows = bucket_agg(df, col, lo, hi, shape,
+                      what_agg(what).alias("count")).collect()
     edges = np.linspace(lo, hi, shape + 1)
     if not dense:
         return rows, edges
@@ -111,12 +131,8 @@ def hist2d(df: DataFrame, expr_x: str | Column, expr_y: str | Column,
     sx, sy = (shape, shape) if isinstance(shape, int) else shape
     cx = F.expr(expr_x) if isinstance(expr_x, str) else expr_x
     cy = F.expr(expr_y) if isinstance(expr_y, str) else expr_y
-    lox, hix = _limits(df, cx, limits_x)
-    loy, hiy = _limits(df, cy, limits_y)
-    if hix == lox:
-        hix = lox + 1.0
-    if hiy == loy:
-        hiy = loy + 1.0
+    lox, hix = resolve_limits(df, expr_x, limits_x)
+    loy, hiy = resolve_limits(df, expr_y, limits_y)
     bx = bucket_expr(cx, lox, hix, sx)
     by = bucket_expr(cy, loy, hiy, sy)
     is_count = what.strip().startswith("count")
@@ -137,8 +153,5 @@ def hist1d_df(df: DataFrame, expression: str | Column, shape: int, lo: float,
     as a query stage (e.g. the driver's oracle comparisons) without a
     driver collect."""
     col = F.expr(expression) if isinstance(expression, str) else expression
-    b = bucket_expr(col, lo, hi, shape)
-    return (df.filter(col.isNotNull() & (col >= lo) & (col <= hi))
-              .groupBy(b.alias("bucket"))
-              .agg(F.count(F.lit(1)).alias("n"))
-              .orderBy("bucket"))
+    return bucket_agg(df, col, lo, hi, shape,
+                      F.count(F.lit(1)).alias("n")).orderBy("bucket")

@@ -15,7 +15,8 @@ Reference math:
 
 from __future__ import annotations
 
-from typing import Any, Sequence
+import weakref
+from typing import Any, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -74,13 +75,78 @@ def basic_stats(df: DataFrame, expression: str | Column) -> dict[str, float]:
             for k in ("count", "mean", "std", "min", "max")}
 
 
+# Range memo of Analyzer views: view DataFrame -> (prefetch columns,
+# {column: (min, max)}). Keyed by the DataFrame object, so an entry
+# lives exactly as long as its view does.
+_RANGE_MEMO: "weakref.WeakKeyDictionary[DataFrame, tuple[list[str], dict]]" = \
+    weakref.WeakKeyDictionary()
+
+
+def _is_deterministic(df: DataFrame) -> bool:
+    """False for a streaming frame, or for a plan (subqueries included)
+    with a non-deterministic expression or a ``Sample``: its rows or
+    values may differ on the next run."""
+    if df.isStreaming:
+        return False
+    todo = [df._jdf.queryExecution().analyzed()]
+    while todo:
+        node = todo.pop()
+        if not node.deterministic() or node.nodeName() == "Sample":
+            return False
+        for seq in (node.children(), node.subqueries()):
+            todo.extend(seq.apply(i) for i in range(seq.size()))
+    return True
+
+
+def memoize_ranges(df: DataFrame, prefetch: Sequence[str],
+                   ranges: Mapping[str, tuple] = ()) -> None:
+    """Make ``df`` a memoized view for :func:`column_ranges`: its first
+    miss also fetches the ``prefetch`` columns' ranges, and ``ranges``
+    are known from the start. A non-deterministic or streaming frame is
+    left alone; it keeps paying one aggregate per call."""
+    if df not in _RANGE_MEMO:
+        if not _is_deterministic(df):
+            return
+        _RANGE_MEMO[df] = (list(prefetch), {})
+    _RANGE_MEMO[df][1].update(ranges)
+
+
+def known_ranges(df: DataFrame) -> dict[str, tuple] | None:
+    """The live ``{column: (min, max)}`` of a memoized view (callers may
+    add what they computed anyway); None for any other frame."""
+    entry = _RANGE_MEMO.get(df)
+    return None if entry is None else entry[1]
+
+
+def column_ranges(df: DataFrame, columns: Sequence[str]) -> list[tuple]:
+    """``(min, max)`` of each named column, as Spark returns them.
+
+    On a memoized view (see :func:`memoize_ranges`) a miss runs ONE
+    aggregate over the missing columns plus every prefetch column not
+    yet known, and later calls on the same view object run nothing. Any
+    other frame gets one aggregate over exactly ``columns``."""
+    prefetch, ranges = _RANGE_MEMO.get(df, ((), {}))
+    todo = [c for c in dict.fromkeys(columns) if c not in ranges]
+    if todo:
+        todo += [c for c in prefetch if c not in ranges and c not in todo]
+        # one SQL select list is one py4j call; a Column pair per column
+        # costs a few calls each, which on a wide prefetch outweighs
+        # the aggregate itself
+        quoted = ["`" + c.replace("`", "``") + "`" for c in todo]
+        row = df.selectExpr(*[f"{f}({q})" for q in quoted
+                              for f in ("min", "max")]).collect()[0]
+        ranges.update((c, (row[2 * i], row[2 * i + 1]))
+                      for i, c in enumerate(todo))
+    return [ranges[c] for c in columns]
+
+
 def passage_fraction_table(df: DataFrame, cut_cols: Sequence[Column],
                            names: Sequence[str]):
     """A9 (semiautocuts.py:2471-2531): N×N matrix where cell (i, j) is
     the pass fraction of cut_i among rows passing cuts_0..j.
 
     The reference loops over pairs with eager masks; here ALL N*(N+1)
-    cells are computed in a single aggregate pass — one job, map-side
+    cells are computed in a single aggregate pass — one action, map-side
     combined, O(N²) columns of a few bytes each.
     """
     import numpy as np

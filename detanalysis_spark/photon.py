@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .operators.stats import column_ranges
 from .traces import rfft_udf  # noqa: F401  (re-export convenience)
 
 __all__ = [
@@ -223,8 +224,7 @@ def fit_spectrum(df: DataFrame, amp_col: str, cut: Column | None = None,
     if cut is not None:
         df = df.filter(cut)
     a = F.col(amp_col).cast("double")
-    mm = df.agg(F.min(a).alias("lo"), F.max(a).alias("hi")).first()
-    lo, hi = float(mm["lo"]), float(mm["hi"])
+    lo, hi = map(float, column_ranges(df, [amp_col])[0])
     width = (hi - lo) / bins or 1.0
     idx = F.least(F.floor((a - lo) / width).cast("int"), F.lit(bins - 1))
     hist = {r["b"]: r["n"] for r in

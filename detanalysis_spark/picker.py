@@ -13,7 +13,8 @@ a rubber-band selection is a box filter, and the trace fetch is the
 same broadcast key join as `traces.get_traces`.
 
 Scale notes (100 TB): the feature ranges used for normalization are
-one tiny min/max aggregate; the nearest-k lookup compiles to
+one tiny min/max aggregate (none on an Analyzer view whose range memo
+knows both columns); the nearest-k lookup compiles to
 `TakeOrderedAndProject` (per-partition top-k then a k-row merge on the
 driver — never a global sort); box select is a plain filter that
 pushes down to parquet.
@@ -26,6 +27,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .operators.stats import column_ranges
 from .traces import get_traces, lowpass_filter_udf
 
 __all__ = ["TracePicker"]
@@ -50,6 +52,7 @@ class TracePicker:
                  traces: DataFrame | None = None,
                  tiebreak: Sequence[str] = ()):
         self._df = df
+        self._names = [x_feature, y_feature]
         self._x = F.expr(x_feature)
         self._y = F.expr(y_feature)
         self._traces = traces
@@ -58,20 +61,22 @@ class TracePicker:
 
     # ------------------------------------------------------------------
     def _axis_ranges(self) -> tuple[float, float, float, float]:
-        """(x_lo, x_span, y_lo, y_span) — one tiny agg, cached.
+        """(x_lo, x_span, y_lo, y_span) — one tiny agg, cached; none
+        when both features are columns of a view whose range memo
+        already knows them (``stats.column_ranges``).
 
         Mirrors the plot's display normalization: the reference picks
         the point nearest the click *on screen*, i.e. distance is
         measured after each axis is scaled to its data range.
         """
         if self._ranges is None:
-            row = self._df.agg(
-                F.min(self._x).alias("xlo"), F.max(self._x).alias("xhi"),
-                F.min(self._y).alias("ylo"), F.max(self._y).alias("yhi"),
-            ).first()
-            xspan = (row.xhi - row.xlo) or 1.0
-            yspan = (row.yhi - row.ylo) or 1.0
-            self._ranges = (row.xlo, xspan, row.ylo, yspan)
+            if all(n in self._df.columns for n in self._names):
+                (xlo, xhi), (ylo, yhi) = column_ranges(self._df, self._names)
+            else:
+                xlo, xhi, ylo, yhi = self._df.agg(
+                    F.min(self._x), F.max(self._x),
+                    F.min(self._y), F.max(self._y)).first()
+            self._ranges = (xlo, (xhi - xlo) or 1.0, ylo, (yhi - ylo) or 1.0)
         return self._ranges
 
     def _dist(self, x: float, y: float) -> Column:

@@ -53,6 +53,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .analyzer import Analyzer
+from .operators.stats import column_ranges
 
 SENTINEL = -1e8
 
@@ -238,8 +239,7 @@ class Semiautocut:
         if self.even_time_bins:
             # equal TIME width (semiautocuts.py:257-259); edge formula
             # lo + step*i is kept textually identical to the SQL oracles
-            row = df.agg(F.min(t).alias("lo"), F.max(t).alias("hi")).collect()[0]
-            lo, hi = float(row["lo"]), float(row["hi"])
+            lo, hi = map(float, column_ranges(df, [self.time_col])[0])
             step = (hi - lo) / n
             return [lo + step * i for i in range(n + 1)]
         # equal events per bin: percentile edges + max (semiautocuts.py:244-255)
@@ -252,10 +252,8 @@ class Semiautocut:
     def _build_ofamp_edges(self, n: int) -> list[float]:
         if n < 3:
             raise ValueError("must have more than 2 ofamp bins")
-        df = self.ana.df_full
-        c = F.col(self.ofamp_rq)
-        row = df.agg(F.min(c).alias("lo"), F.max(c).alias("hi")).collect()[0]
-        lo, hi = float(row["lo"]), float(row["hi"])
+        lo, hi = map(float, column_ranges(self.ana.df_full,
+                                          [self.ofamp_rq])[0])
         spacing = hi / (n - 2)
         return [lo, 0.0] + [spacing * (i - 1) for i in range(2, n)]
 
@@ -292,8 +290,7 @@ class Semiautocut:
             return self.time_col, [(e[i], e[i + 1]) for i in range(len(e) - 1)]
         if self.ofamp_bins_arr is not None:
             e = self.ofamp_bins_arr
-            hi = float(self.ana.df_full.agg(
-                F.max(F.col(self.ofamp_rq))).collect()[0][0])
+            hi = float(column_ranges(self.ana.df_full, [self.ofamp_rq])[0][1])
             lims = [(e[i], e[i + 1]) for i in range(len(e) - 1)]
             lims.append((e[-1], hi))  # final bin to data max (strict)
             return self.ofamp_rq, lims
@@ -304,7 +301,7 @@ class Semiautocut:
 
     def _estimate(self, lims: list[tuple[float, float]], bin_col: str | None,
                   include_previous_cuts) -> list[tuple[float | None, float | None]]:
-        """Per-bin (lower, upper) bounds; one Spark job for all bins."""
+        """Per-bin (lower, upper) bounds; one action for all bins."""
         n_bins = max(len(lims), 1)
         pars_by_bin = [self._pars_for_bin(i) for i in range(n_bins)]
         all_fracs = sorted({f for p in pars_by_bin for f in _fracs_needed(p)})
@@ -404,7 +401,7 @@ class Semiautocut:
         self.values_upper = [hi_v] * len(self.time_bins_arr)
 
         df = self.ana.df_full
-        t_max = float(df.agg(F.max(F.col(self.time_col))).collect()[0][0])
+        t_max = float(column_ranges(df, [self.time_col])[0][1])
         edges = list(self.time_bins_arr) + [t_max]
         lims = [(edges[i], edges[i + 1]) for i in range(len(edges) - 1)]
 
@@ -481,7 +478,7 @@ class Semiautocut:
     ) -> dict[str, tuple[int, int, float]]:
         """All three trigger-type splits of :meth:`get_passage_fraction`
         — randoms-only, triggers-only, both — from ONE map-side-combined
-        aggregate instead of three separate jobs (the reference's loop at
+        aggregate instead of three separate actions (the reference's loop at
         semiautocuts.py:1846-1896 scans once per selection).
 
         Returns ``{sel: (n, passed, fraction)}`` for
@@ -537,18 +534,25 @@ class Semiautocut:
                    limits=None) -> tuple:
         """Data behind ``plot_histograms`` (semiautocuts.py:1612-1727):
         (counts_all, counts_passing, edges) over the cut RQ — both
-        histograms share the full-range edges, two distributed passes."""
+        histograms share the full-range edges and come from ONE bucket
+        aggregate of ``count(1)`` and the passing count."""
         if self.column is None:
             raise RuntimeError("call do_cut() first")
-        from .operators.histogram import hist1d
+        import numpy as np
+        from .operators.histogram import bucket_agg, resolve_limits
         df = self.ana.df_full
-        counts_all, edges = hist1d(df, self.cut_rq, shape=shape,
-                                   limits=limits if limits is not None
-                                   else "minmax")
-        lo, hi = float(edges[0]), float(edges[-1])
-        counts_pass, _ = hist1d(df.filter(self.column), self.cut_rq,
-                                shape=shape, limits=(lo, hi))
-        return counts_all, counts_pass, edges
+        lo, hi = resolve_limits(df, self.cut_rq, limits)
+        rows = bucket_agg(df, F.col(self.cut_rq), lo, hi, shape,
+                          F.count(F.lit(1)).alias("n"),
+                          F.count(F.when(self.column, 1)).alias("passed")
+                          ).collect()
+        counts_all = np.zeros(shape, dtype=np.int64)
+        counts_pass = np.zeros(shape, dtype=np.int64)
+        for r in rows:
+            if r["bucket"] is not None and 0 <= r["bucket"] < shape:
+                counts_all[r["bucket"]] = r["n"]
+                counts_pass[r["bucket"]] = r["passed"]
+        return counts_all, counts_pass, np.linspace(lo, hi, shape + 1)
 
     # ------------------------------------------------------------------
     # cut-recipe (de)serialization (semiautocuts.py:308-381, 1899-1936)
@@ -798,11 +802,11 @@ class MasterSemiautocuts:
         ``(matrix, cut_names)`` with NaN above the diagonal — or
         ``(matrix, cut_names, nrand)`` with ``return_nrand=True``
         (the randoms count already rides along in the same aggregate;
-        returning it saves callers a second job).
+        returning it saves callers a second action).
 
         The reference materializes an n×N mask matrix on the driver;
         here every cell is a ``sum()`` column of one aggregate — a
-        single map-side-combined job, O(n²) scalar results.
+        single map-side-combined action, O(n²) scalar results.
         """
         import numpy as np
 

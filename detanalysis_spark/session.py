@@ -25,10 +25,9 @@ _DEFAULTS = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # parquet pushdown knobs are on by default; pin them explicitly so a
+    # parquet filter pushdown is on by default; pin it explicitly so a
     # misconfigured cluster doesn't silently lose pushdown
     "spark.sql.parquet.filterPushdown": "true",
-    "spark.sql.parquet.aggregatePushdown": "true",
     "spark.ui.showConsoleProgress": "false",
     "spark.ui.enabled": "false",
     # synthetic testdata stores TIMESTAMP(NANOS); see sources/tables.py

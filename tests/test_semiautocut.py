@@ -228,6 +228,35 @@ def test_diagnostics_frame_and_histograms(ana, arrays):
     assert len(edges) == 33
 
 
+def test_histograms_one_aggregate_matches_two_pass(spark):
+    """The fused histograms (one bucket aggregate of count and passing
+    count) equal the two-pass result — all rows, then the passing rows
+    over the same edges — with NULL RQ values and rows sitting exactly
+    on edge values, under minmax, explicit and empty-range limits."""
+    from detanalysis_spark.operators import hist1d
+    vals = [0.0, 0.0, 2.0, 4.0, 4.0, 6.0, 8.0, 8.0, None, None, 1.0, 3.5,
+            5.0, 7.0, 7.9, None, 2.0, 6.5]
+    a = Analyzer(spark.createDataFrame(list(enumerate(vals)),
+                                       f"`{EVENT_INDEX}` long, rq double"))
+    sac = Semiautocut(a, "rq", cut_pars={"val_lower": 1.0,
+                                         "val_upper": 7.0})
+    sac.do_cut()
+    for shape, limits in ((4, None), (8, (2.0, 6.0)), (3, (4.0, 4.0))):
+        counts_all, counts_pass, edges = sac.histograms(shape, limits)
+        want_all, want_edges = hist1d(a.df_full, "rq", shape=shape,
+                                      limits=limits or "minmax")
+        want_pass, _ = hist1d(a.df_full.filter(sac.column), "rq",
+                              shape=shape,
+                              limits=(want_edges[0], want_edges[-1]))
+        np.testing.assert_array_equal(edges, want_edges)
+        np.testing.assert_array_equal(counts_all, want_all)
+        np.testing.assert_array_equal(counts_pass, want_pass)
+        assert counts_all.dtype == counts_pass.dtype == np.int64
+    assert counts_all.sum() == counts_pass.sum() == 3   # 4, 4, 5
+    counts_all, counts_pass, _ = sac.histograms(4)
+    assert counts_all.sum() == 15 and counts_pass.sum() == 8
+
+
 def test_include_previous_cuts_auto_discovery(spark, arrays):
     """include_previous_cuts=True discovers registered `cut_*` names
     matching the channel AND boolean `cut_*` columns already on the
