@@ -18,6 +18,13 @@ context (1/5/15-min load averages at start and end, CPU count) is
 recorded alongside so a loaded-box round is identifiable after the
 fact. Full detail (per-run samples, spread) goes to BENCH_DETAIL.json;
 stdout stays compact because the driver records only a ~2000-char tail.
+
+Per-query profile (BENCH_DETAIL ``profile``): pass 1 times ``fn()``
+(plan build plus eager builder work) apart from its ``collect()``, as
+``build_s`` / ``first_collect_s`` for every query. ``exec_s`` (the
+exec-only pass below) and Catalyst phase walls cover the ``TOP_K``
+slowest queries only; over all 178 queries ``exec_s`` summed to 14.8 s
+of 207.6 s in r12 (OPTIMIZATION_r12.md).
 """
 
 from __future__ import annotations
@@ -31,6 +38,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench.harness import cpu_times, steal_pct
 
 TOP_K = 20          # slowest queries re-run for median-of-3
 EXTRA_RUNS = 2      # re-runs on top of the pass-1 sample
@@ -63,7 +72,7 @@ def main() -> int:
     max_wait = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_WAIT", "600"))
     # VERDICT r12 #1: r12's official numbers landed in a host-steal
     # window the loadavg guard cannot see (guest loadavg was quiet while
-    # /proc/stat steal burst to 10% and inflated totals 13-25%). Gate
+    # measured CPU steal burst to 10% and inflated totals 13-25%). Gate
     # the timed pass on a short measured steal sample too.
     max_steal = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_STEAL", "0.5"))
 
@@ -71,31 +80,19 @@ def main() -> int:
         l1, l5, _ = os.getloadavg()
         return l1 > max_load or l5 > max_load * 1.5
 
-    def cpu_ticks() -> tuple[int, int]:
-        """(steal, total) jiffies from /proc/stat — loadavg only sees
-        guest-runnable threads; a noisy-neighbor host shows up as
-        steal time and inflates wall clocks by 2-4x in bursts
-        (measured round 12: 0.1% -> 10% swings within minutes).
-        Total sums the first 8 fields (user..steal) only: guest/
-        guest_nice are already folded into user/nice by the kernel, so
-        including them double-counts and understates steal% (ADVICE
-        r12). The 8-field basis holds from r13 on; earlier
-        BENCH_HISTORY rows summed every field, so the r12→r13 step in
-        the cpu_steal_pct series is this basis change, not the host."""
-        try:
-            with open("/proc/stat") as f:
-                vals = [int(x) for x in f.readline().split()[1:]]
-            return vals[7] if len(vals) > 7 else 0, sum(vals[:8])
-        except Exception:  # noqa: BLE001 — diagnostics must not fail the bench
-            return 0, 0
-
     def steal_sample(window_sec: float) -> float:
         """Measured steal%% over a sleep window (the sample doubles as
-        the guard's wait tick)."""
-        s0, t0 = cpu_ticks()
+        the guard's wait tick). loadavg only sees guest-runnable
+        threads; a noisy-neighbor host shows up as steal time and
+        inflates wall clocks by 2-4x in bursts (measured round 12:
+        0.1% -> 10% swings within minutes). The basis is the first 8
+        kernel CPU-time fields (user..steal; guest time is already
+        folded into user/nice) from r13 on; earlier
+        BENCH_HISTORY rows summed every field, so the r12→r13 step in
+        the cpu_steal_pct series is this basis change, not the host."""
+        t0 = cpu_times()
         time.sleep(window_sec)
-        s1, t1 = cpu_ticks()
-        return 100.0 * (s1 - s0) / max(t1 - t0, 1)
+        return steal_pct(t0, cpu_times())
 
     # the first steal sample is mandatory and reported on its own;
     # waited_sec counts only the guard's extra wait ticks
@@ -121,36 +118,46 @@ def main() -> int:
         "waited_sec": round(waited, 1),
         "quiet": not loaded() and steal_now <= max_steal,
     }
-    steal0 = cpu_ticks()
+    cpus = spark.sparkContext.defaultParallelism
+    steal0 = cpu_times()
     # warm up the JVM + parquet footers once so per-query numbers measure
     # the plans, not session startup
     suite.QUERIES["flagship_event_cut_stats"](spark, sf_dir).collect()
 
-    def run_once(name: str) -> float:
+    def run_once(name: str) -> tuple[float, float]:
+        """(build_s, first_collect_s) of one ``fn()`` + ``collect()``."""
+        df = None
         t0 = time.time()
         try:
-            suite.QUERIES[name](spark, sf_dir).collect()
-            dt = time.time() - t0
+            df = suite.QUERIES[name](spark, sf_dir)
+            t1 = time.time()
+            df.collect()
+            split = (t1 - t0, time.time() - t1)
         except Exception as e:  # noqa: BLE001
             print(f"# bench error in {name}: {e}", file=sys.stderr)
-            dt = float("nan")
+            split = (float("nan"), float("nan"))
         # release localCheckpoint RDDs / broadcasts pinned by dropped
         # DataFrame refs so earlier queries' executor storage doesn't
         # inflate later ones (GC runs outside the timed window)
+        df = None
         gc.collect()
-        return dt
+        return split
 
     # pass 1: every query once (cold sample = warm-up for pass 2)
     samples: dict[str, list[float]] = {}
+    profile: dict[str, dict] = {}
     for name in suite.QUERIES:
-        samples[name] = [run_once(name)]
+        b, c = run_once(name)
+        samples[name] = [b + c]
+        profile[name] = {"build_s": round(b, 4),
+                         "first_collect_s": round(c, 4)}
 
     # pass 2: median-of-3 for the slowest TOP_K (NaN errors excluded)
     top = sorted((n for n, s in samples.items() if s[0] == s[0]),
                  key=lambda n: samples[n][0], reverse=True)[:TOP_K]
     for _ in range(EXTRA_RUNS):
         for name in top:
-            samples[name].append(run_once(name))
+            samples[name].append(sum(run_once(name)))
 
     # exec-only pass: re-collect the SAME DataFrame object for each top
     # query. Spark caches the analyzed/optimized plan on the DataFrame,
@@ -161,16 +168,23 @@ def main() -> int:
     # 0.42 s Python plan build + 0.96 s analysis/codegen vs 0.05 s
     # execution. CAVEAT: queries whose builder runs eager stages
     # (checkpoints, scalar thresholds, layout writes, streaming drains)
-    # did that work during fn(); their exec_only covers only the
+    # did that work during fn(); their exec_s covers only the
     # returned final plan and is a LOWER bound, not the full exec cost.
-    exec_only: dict[str, float] = {}
     for name in top:
         try:
             df = suite.QUERIES[name](spark, sf_dir)
             df.collect()  # analyze + codegen this exact DataFrame
             t0 = time.time()
             df.collect()
-            exec_only[name] = round(time.time() - t0, 4)
+            profile[name]["exec_s"] = round(time.time() - t0, 4)
+            # Catalyst phase walls (analysis/optimization/planning)
+            phases, it = {}, (df._jdf.queryExecution().tracker()
+                              .phases().iterator())
+            while it.hasNext():
+                kv = it.next()
+                phases[str(kv._1())] = round(
+                    (kv._2().endTimeMs() - kv._2().startTimeMs()) / 1000.0, 4)
+            profile[name]["phases"] = phases
         except Exception as e:  # noqa: BLE001
             print(f"# bench exec-only error in {name}: {e}",
                   file=sys.stderr)
@@ -183,15 +197,13 @@ def main() -> int:
     timings = {n: round(reported(s), 4) for n, s in samples.items()}
     total = sum(v for v in timings.values() if v == v)
     load_end = os.getloadavg()
-    steal1 = cpu_ticks()
-    steal_pct = (100.0 * (steal1[0] - steal0[0])
-                 / max(steal1[1] - steal0[1], 1))
+    steal_run = steal_pct(steal0, cpu_times())
     machine = {
-        "cpus": os.cpu_count(),
+        "cpus": cpus,
         "load_avg_start": [round(x, 2) for x in load_start],
         "load_avg_end": [round(x, 2) for x in load_end],
         "load_guard": load_guard,
-        "cpu_steal_pct": round(steal_pct, 2),
+        "cpu_steal_pct": round(steal_run, 2),
     }
 
     detail_path = os.path.join(
@@ -218,7 +230,7 @@ def main() -> int:
                                  "(after one suite-wide warm-up pass) "
                                  "otherwise",
                 "top_query_spread": spread,
-                "exec_only": exec_only,
+                "profile": profile,
                 "machine": machine,
             },
             f,
@@ -238,10 +250,11 @@ def main() -> int:
             "ts": round(time.time(), 1),
             "total_sec": round(total, 2),
             "sf": sf,
+            "cpus": cpus,
             "n_queries": len(timings),
             "load_guard_quiet": load_guard["quiet"],
             "load_avg_end": [round(x, 2) for x in load_end],
-            "cpu_steal_pct": round(steal_pct, 2),
+            "cpu_steal_pct": round(steal_run, 2),
             "queries": timings,
         }, sort_keys=True, separators=(",", ":")) + "\n")
 
@@ -263,7 +276,7 @@ def main() -> int:
                 "n_queries": len(timings),
                 "timing": f"median{1 + EXTRA_RUNS}xtop{TOP_K}",
                 "load_avg": [round(x, 2) for x in load_end],
-                "cpu_steal_pct": round(steal_pct, 2),
+                "cpu_steal_pct": round(steal_run, 2),
                 "load_guard_quiet": load_guard["quiet"],
                 "detail": "BENCH_DETAIL.json",
             },

@@ -18,7 +18,7 @@ def con():
 
 
 def test_psl_parity_matches_oracle(con):
-    from tools.sf1_compare import install_psl_tables, psl_parity_sql
+    from tools.duckdb_compare import install_psl_tables, psl_parity_sql
     from detanalysis_spark import suite
     md = install_psl_tables(con)
     parity = con.execute(psl_parity_sql(md)).fetchdf() \
@@ -30,7 +30,7 @@ def test_psl_parity_matches_oracle(con):
 
 
 def test_lsh_parity_recovers_all_true_pairs(con):
-    from tools.sf1_compare import LSH_PARITY_SQL
+    from tools.duckdb_compare import LSH_PARITY_SQL
     from detanalysis_spark import suite
     truth = set(map(tuple, con.execute(
         f"SELECT id_a, id_b FROM "

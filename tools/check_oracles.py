@@ -6,6 +6,9 @@ compares row count, column names, and order-insensitive values
 both sides' own rounding). Usage:
 
     python tools/check_oracles.py [query_name ...]
+
+`tools/duckdb_compare.py --gate` runs the same gate in-process on
+other scale factors through `duck_views`, `compare` and `gate`.
 """
 
 from __future__ import annotations
@@ -26,6 +29,17 @@ from detanalysis_spark.sources.tables import TABLES
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
+def duck_views(sf_dir: str):
+    """A DuckDB connection with one view per suite table under
+    ``sf_dir``, so oracle SQL reads the same parquet as Spark."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
 def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     pdf = pdf.reindex(sorted(pdf.columns), axis=1)
     for c in pdf.columns:
@@ -35,10 +49,10 @@ def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf
 
 
-def compare(name: str, spark, con) -> tuple[bool, str]:
+def compare(name: str, spark, con, sf_dir: str = SF_DIR) -> tuple[bool, str]:
     q = suite.QUERIES[name]
     t0 = time.time()
-    sdf = q(spark, SF_DIR).toPandas()
+    sdf = q(spark, sf_dir).toPandas()
     t_spark = time.time() - t0
     if name not in suite.ORACLES:
         return True, f"rows-only ({len(sdf)} rows, {t_spark:.2f}s, no oracle)"
@@ -53,6 +67,25 @@ def compare(name: str, spark, con) -> tuple[bool, str]:
     except AssertionError as e:
         return False, f"value mismatch: {str(e)[:500]}"
     return True, f"ok ({len(sdf)} rows, {t_spark:.2f}s)"
+
+
+def gate(names, spark, sf_dir: str = SF_DIR) -> int:
+    """Print PASS/FAIL per query and a summary; returns the FAIL count."""
+    con = duck_views(sf_dir)
+    n_fail = 0
+    for name in names:
+        if name not in suite.QUERIES:
+            print(f"FAIL {name}: unknown query")
+            n_fail += 1
+            continue
+        try:
+            ok, msg = compare(name, spark, con, sf_dir)
+        except Exception as e:  # noqa: BLE001
+            ok, msg = False, f"exception: {type(e).__name__}: {str(e)[:300]}"
+        print(f"{'PASS' if ok else 'FAIL'} {name}: {msg}", flush=True)
+        n_fail += 0 if ok else 1
+    print(f"\n{len(names) - n_fail}/{len(names)} pass")
+    return n_fail
 
 
 def _vanilla_spark():
@@ -76,25 +109,7 @@ def main() -> int:
     names = sys.argv[1:] or list(suite.QUERIES)
     spark = (_vanilla_spark() if os.environ.get("SPARK_GRAFT_VANILLA")
              else get_spark("oracle-check"))
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{SF_DIR}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    n_fail = 0
-    for name in names:
-        if name not in suite.QUERIES:
-            print(f"FAIL {name}: unknown query")
-            n_fail += 1
-            continue
-        try:
-            ok, msg = compare(name, spark, con)
-        except Exception as e:  # noqa: BLE001
-            ok, msg = False, f"exception: {type(e).__name__}: {str(e)[:300]}"
-        print(f"{'PASS' if ok else 'FAIL'} {name}: {msg}")
-        n_fail += 0 if ok else 1
-    print(f"\n{len(names) - n_fail}/{len(names)} pass")
-    return 1 if n_fail else 0
+    return 1 if gate(names, spark) else 0
 
 
 if __name__ == "__main__":
