@@ -7,6 +7,16 @@ Arrow batches), shuffle partitions sized to cores rather than the 200
 default, and a UTC session timezone so results compare bit-for-bit with
 external oracles (DuckDB timestamps are UTC-naive).
 
+The driver heap defaults to half of physical RAM, at most 48g
+(``SPARK_GRAFT_DRIVER_MEM`` overrides it). On ``local[...]`` masters the
+Python workers run under ``detanalysis_spark._pydaemon``, which stops
+every Python task from re-reading Spark's zip archives (~0.2 s of CPU
+per task on Python < 3.13); the package root goes on the workers'
+``PYTHONPATH`` so the daemon imports from any cwd. Passing
+``**{"spark.python.daemon.module": "pyspark.daemon"}`` restores Spark's
+stock daemon. Other masters keep the stock daemon, since executors may
+not have the package (SCALING.md gives the spark-defaults line).
+
 At 100 TB on a real cluster the same settings hold; only
 `spark.sql.shuffle.partitions` grows (or is left to AQE's
 `advisoryPartitionSizeInBytes` to coalesce), and executors/memory come
@@ -34,6 +44,42 @@ _DEFAULTS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
+_DAEMON = "detanalysis_spark._pydaemon"
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _default_driver_mem() -> str:
+    """Half of physical RAM, capped at 48g."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(48 * 1024, half_mb)}m"
+
+
+def session_conf(master: str, shuffle_partitions: int | None = None,
+                 **extra: str) -> dict:
+    """The configs ``get_spark`` sets on top of ``master``; ``extra``
+    overrides any of them."""
+    if shuffle_partitions is None:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        # local mode = the driver JVM is the whole engine; the 1g default
+        # heap OOMs real workloads. On a cluster this is the deploy's
+        # concern — the setting only applies at JVM launch.
+        "spark.driver.memory": (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                                or _default_driver_mem()),
+    }
+    if master.startswith("local"):
+        conf["spark.python.daemon.module"] = _DAEMON
+    conf.update(_DEFAULTS)
+    conf.update(extra)
+    if conf.get("spark.python.daemon.module") == _DAEMON:
+        key = "spark.executorEnv.PYTHONPATH"
+        pp = [p for p in conf.get(key, "").split(os.pathsep) if p]
+        if _ROOT not in pp:
+            conf[key] = os.pathsep.join([_ROOT] + pp)
+    return conf
+
 
 def get_spark(app_name: str = "detanalysis_spark", master: str | None = None,
               shuffle_partitions: int | None = None, **extra: str) -> SparkSession:
@@ -42,21 +88,11 @@ def get_spark(app_name: str = "detanalysis_spark", master: str | None = None,
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, fallback
     ``local[*]``); on a cluster, pass ``None`` and let spark-submit set it.
     """
-    builder = SparkSession.builder.appName(app_name)
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    builder = builder.master(master)
-    if shuffle_partitions is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
-    builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    # local mode = the driver JVM is the whole engine; the 1g default
-    # heap OOMs real workloads on a 32-core box. On a cluster this is
-    # the deploy's concern — the setting only applies at JVM launch.
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-    builder = builder.config("spark.driver.memory", mem)
-    for k, v in {**_DEFAULTS, **extra}.items():
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in session_conf(master, shuffle_partitions, **extra).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

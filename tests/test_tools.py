@@ -28,3 +28,37 @@ def test_verify_docs_name_existing_tools():
         assert paths
         assert [p for p in sorted(paths)
                 if not os.path.exists(os.path.join(ROOT, p))] == []
+
+
+def test_gate_stops_at_lost_jvm(monkeypatch, tmp_path, capsys):
+    from tools import check_oracles as co
+    from py4j.protocol import Py4JNetworkError
+    names = sorted(suite.QUERIES)[:5]
+    calls = []
+
+    def stub(name, spark, con, sf_dir):
+        calls.append(name)
+        if len(calls) == 2:
+            raise ConnectionRefusedError(111, "Connection refused")
+        return True, "ok"
+
+    monkeypatch.setattr(co, "compare", stub)
+    assert co.gate(names, None, str(tmp_path)) == 4
+    assert calls == names[:2]
+    out = capsys.readouterr().out
+    assert f"PASS {names[0]}" in out
+    assert f"FAIL {names[1]}: JVM lost: ConnectionRefusedError" in out
+    assert [ln for ln in out.splitlines() if ln.startswith("NOT RUN")] == [
+        f"NOT RUN {n}" for n in names[2:]]
+    assert "1/5 pass" in out
+
+    def lost(name, spark, con, sf_dir):
+        raise Py4JNetworkError("Answer from Java side is empty")
+
+    monkeypatch.setattr(co, "compare", lost)
+    assert co.gate(names, None, str(tmp_path)) == 5
+    assert capsys.readouterr().out.count("NOT RUN") == 4
+    # any other exception is one query's failure, and the gate goes on
+    monkeypatch.setattr(co, "compare", lambda *a: 1 / 0)
+    assert co.gate(names, None, str(tmp_path)) == 5
+    assert capsys.readouterr().out.count("ZeroDivisionError") == 5

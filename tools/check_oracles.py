@@ -21,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pandas as pd
+from py4j.protocol import Py4JNetworkError
 
 from detanalysis_spark.session import get_spark
 from detanalysis_spark import suite
@@ -70,16 +71,25 @@ def compare(name: str, spark, con, sf_dir: str = SF_DIR) -> tuple[bool, str]:
 
 
 def gate(names, spark, sf_dir: str = SF_DIR) -> int:
-    """Print PASS/FAIL per query and a summary; returns the FAIL count."""
+    """Print PASS/FAIL per query and a summary; returns the FAIL count.
+    A lost JVM stops the gate: the names left print as NOT RUN and
+    count as failures."""
+    names = list(names)
     con = duck_views(sf_dir)
     n_fail = 0
-    for name in names:
+    for i, name in enumerate(names):
         if name not in suite.QUERIES:
             print(f"FAIL {name}: unknown query")
             n_fail += 1
             continue
         try:
             ok, msg = compare(name, spark, con, sf_dir)
+        except (ConnectionRefusedError, Py4JNetworkError) as e:
+            print(f"FAIL {name}: JVM lost: {type(e).__name__}: {str(e)[:300]}")
+            for rest in names[i + 1:]:
+                print(f"NOT RUN {rest}", flush=True)
+            n_fail += len(names) - i
+            break
         except Exception as e:  # noqa: BLE001
             ok, msg = False, f"exception: {type(e).__name__}: {str(e)[:300]}"
         print(f"{'PASS' if ok else 'FAIL'} {name}: {msg}", flush=True)
