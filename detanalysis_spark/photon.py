@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from .operators.stats import column_ranges
 from .traces import rfft_udf  # noqa: F401  (re-export convenience)
+from .util import blas_single_thread
 
 __all__ = [
     "model_spectrum", "default_guess", "default_bounds", "fit_spectrum",
@@ -120,11 +121,13 @@ def default_bounds(guess: list, npeaks: int = 5, poisson: bool = False,
 # ----------------------------------------------------------------------
 # bounded Levenberg–Marquardt (scipy-free stand-in for least_squares)
 # ----------------------------------------------------------------------
+@blas_single_thread()
 def least_squares_lm(resid_fn, x0, bounds=None, max_iter: int = 200,
                      tol: float = 1e-12):
     """Minimize ‖resid(p)‖² with numeric Jacobian and box bounds
     (projection). Returns (popt, pcov, pstds) with pcov = (JᵀJ)⁻¹ as in
     the reference's post-fit covariance (photon_calibration.py:577-581).
+    Runs with numpy's BLAS pool at one thread (``util.blas_single_thread``).
     """
     p = np.asarray(x0, dtype=np.float64)
     lo = np.full_like(p, -np.inf) if bounds is None else np.asarray(bounds[0])

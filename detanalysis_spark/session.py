@@ -17,6 +17,26 @@ per task on Python < 3.13); the package root goes on the workers'
 stock daemon. Other masters keep the stock daemon, since executors may
 not have the package (SCALING.md gives the spark-defaults line).
 
+Two defaults cut the driver's fixed cost per analyst call (SCALING.md
+"Driver fixed cost per call"):
+
+- ``spark.python.sql.dataFrameDebugging.enabled=false`` stops PySpark
+  from capturing the Python call site of every Column and function
+  call (~6 py4j round trips each: ``F.col("a") > 1`` takes 4 round
+  trips instead of 24). PySpark reads the flag once per process, at
+  the first wrapped call, so it applies only when ``get_spark`` creates
+  the session before the first DataFrame call. Error messages then
+  lack the Python "DataFrame query context";
+  ``get_spark(**{"spark.python.sql.dataFrameDebugging.enabled": "true"})``
+  brings it back.
+- ``spark.sql.codegen.cache.maxEntries=1000`` (Spark's default is 100)
+  keeps the generated classes of a whole session compiled. The cache
+  evicts per segment (4 segments of 100/4 entries at the default), so
+  a working set of 95 classes (the perfbench analyst session) already
+  recompiled a third of its classes on every pass, and one of 228
+  (the curation-plus-ingest pass) recompiled all of them. A JVM-wide
+  static setting: it must be set before the session starts.
+
 At 100 TB on a real cluster the same settings hold; only
 `spark.sql.shuffle.partitions` grows (or is left to AQE's
 `advisoryPartitionSizeInBytes` to coalesce), and executors/memory come
@@ -42,6 +62,10 @@ _DEFAULTS = {
     "spark.ui.enabled": "false",
     # synthetic testdata stores TIMESTAMP(NANOS); see sources/tables.py
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # no per-call Python call-site capture (module docstring)
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # room for a session's generated classes (module docstring)
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 _DAEMON = "detanalysis_spark._pydaemon"

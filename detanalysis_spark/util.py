@@ -10,8 +10,15 @@ plan-local relation: ~0.2 s, no Python workers at execution. Every
 small literal frame in the engine's hot paths (PSL rule tables,
 driver-computed offsets, oracle-query result frames, the Spark
 fallback of ``write_small_parquet``) goes through here.
+
+``blas_single_thread`` keeps numpy's OpenBLAS pool at one thread
+around driver-side solves (``photon.least_squares_lm``).
 """
 from __future__ import annotations
+
+import ctypes
+from contextlib import contextmanager
+from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -210,3 +217,54 @@ def _ddl_arrow_table(rows: list, schema: str):
     arrays = [pa.array([r[i] for r in rows], type=fld.type)
               for i, fld in enumerate(fields)]
     return pa.Table.from_arrays(arrays, schema=pa.schema(fields))
+
+
+def _blas_thread_fns(lib):
+    """``(get, set)`` of an OpenBLAS library's thread-pool size, or None
+    when ``lib`` exports neither the ILP64 (numpy's wheels) nor the
+    plain symbol pair."""
+    for suffix in ("64_", ""):
+        try:
+            return (getattr(lib, f"openblas_get_num_threads{suffix}"),
+                    getattr(lib, f"openblas_set_num_threads{suffix}"))
+        except AttributeError:
+            pass
+    return None
+
+
+@lru_cache(maxsize=1)
+def _numpy_blas():
+    """The thread-pool functions of the BLAS numpy's linalg links; a
+    handle's symbol lookup also searches the libraries it depends on."""
+    try:
+        import numpy.linalg._umath_linalg as linalg
+        fns = _blas_thread_fns(ctypes.CDLL(linalg.__file__))
+    except (ImportError, OSError):
+        return None
+    if fns is not None:
+        get, set_ = fns
+        get.argtypes, get.restype = [], ctypes.c_int
+        set_.argtypes, set_.restype = [ctypes.c_int], None
+    return fns
+
+
+@contextmanager
+def blas_single_thread():
+    """Run the block (or, as a decorator, the function) with numpy's
+    OpenBLAS pool at one thread, then restore its size.
+
+    Small driver-side solves wake the pool, and its idle threads spin
+    for the rest of the caller's run: an LM spectrum fit used 180-590 ms
+    of process CPU for 80-160 ms of thread CPU on a 4-core host. A no-op
+    for other BLAS builds (MKL, Accelerate) and for Python workers,
+    whose pool Spark already sizes to 1 (``OMP_NUM_THREADS``)."""
+    fns = _numpy_blas()
+    old = fns[0]() if fns else 1
+    if old <= 1:
+        yield
+        return
+    fns[1](1)
+    try:
+        yield
+    finally:
+        fns[1](old)

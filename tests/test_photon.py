@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from detanalysis_spark import photon as P
+from detanalysis_spark import util
 
 SPACING = 4.0
 STDS = [0.30, 0.32, 0.35, 0.40, 0.45]
@@ -57,6 +58,87 @@ def test_lm_recovers_parabola_minimum():
     assert popt[0] == pytest.approx(3.0, abs=1e-6)
     assert popt[1] == pytest.approx(-1.0, abs=1e-6)
     assert np.all(np.isfinite(pstds))
+
+
+def _comb_fit_args():
+    """The perfbench spectrum: 20k events on the 5-peak comb, 200 bins,
+    with fit_spectrum's weights, guess and bounds."""
+    rng = np.random.default_rng(1)
+    peaks = rng.choice(NPEAKS, size=N_EVENTS, p=WEIGHTS)
+    amps = peaks * SPACING + rng.standard_normal(N_EVENTS) * \
+        np.array(STDS)[peaks]
+    counts, edges = np.histogram(amps, bins=200)
+    centers = (edges[1:] + edges[:-1]) / 2
+    w = np.where(counts > 0, 1 / np.sqrt(np.maximum(counts, 1)), 0.0)
+
+    def resid(p):
+        return (counts - P.model_spectrum(centers, p, npeaks=NPEAKS)) * w
+    guess = P.default_guess(SPACING * 1.03, 0.4, N_EVENTS * 0.02, NPEAKS)
+    return resid, guess, P.default_bounds(guess, NPEAKS)
+
+
+@pytest.fixture
+def blas_pool():
+    """numpy's OpenBLAS (get, set) pair with the pool at 2 threads;
+    restores the size it found."""
+    fns = util._numpy_blas()
+    if fns is None:
+        pytest.skip("numpy does not link OpenBLAS")
+    get, set_ = fns
+    old = get()
+    set_(2)
+    yield get
+    set_(old)
+
+
+def test_lm_runs_blas_single_threaded_and_restores_pool(blas_pool):
+    resid, guess, bounds = _comb_fit_args()
+    seen = []
+
+    def watched(p):
+        seen.append(blas_pool())
+        return resid(p)
+    P.least_squares_lm(watched, guess, bounds)
+    assert seen and set(seen) == {1}
+    assert blas_pool() == 2
+
+    def failing(p):
+        if len(seen) > 5:
+            raise RuntimeError("model blew up")
+        seen.append(blas_pool())
+        return resid(p)
+    seen.clear()
+    with pytest.raises(RuntimeError, match="blew up"):
+        P.least_squares_lm(failing, guess, bounds)
+    assert blas_pool() == 2
+
+
+def test_lm_single_thread_matches_uncapped_fit(blas_pool, monkeypatch):
+    resid, guess, bounds = _comb_fit_args()
+    capped = P.least_squares_lm(resid, guess, bounds)[0]
+    monkeypatch.setattr(util, "_numpy_blas", lambda: None)
+    uncapped = P.least_squares_lm(resid, guess, bounds)[0]
+    np.testing.assert_allclose(capped, uncapped, rtol=1e-9)
+    assert abs(capped[0] - SPACING) < 0.02 * SPACING
+
+
+def test_blas_helper_without_the_symbol(monkeypatch):
+    from types import SimpleNamespace
+    assert util._blas_thread_fns(SimpleNamespace()) is None
+    monkeypatch.setattr(util, "_numpy_blas", lambda: util._blas_thread_fns(
+        SimpleNamespace()))
+    with util.blas_single_thread():
+        pass
+    # a build exporting only the plain (LP64) pair is pinned and restored
+    calls = []
+    lib = SimpleNamespace(openblas_get_num_threads=lambda: 3,
+                          openblas_set_num_threads=calls.append)
+    monkeypatch.setattr(util, "_numpy_blas", lambda: util._blas_thread_fns(lib))
+    with pytest.raises(KeyError):
+        with util.blas_single_thread():
+            assert calls == [1]
+            raise KeyError
+    assert calls == [1, 3]
 
 
 def test_fit_spectrum_recovers_spacing(calib):

@@ -6,11 +6,14 @@ import sys
 import textwrap
 import zipfile
 
+from pyspark.sql import functions as F
+
 from detanalysis_spark import session
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DAEMON = "spark.python.daemon.module"
 PP = "spark.executorEnv.PYTHONPATH"
+DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
 
 
 def test_session_conf_daemon_on_local_masters_only():
@@ -28,6 +31,52 @@ def test_session_conf_daemon_on_local_masters_only():
     assert conf[PP].split(os.pathsep) == [ROOT, "/opt/a", "/opt/b"]
     conf = session.session_conf("local[2]", **{PP: ROOT})
     assert conf[PP] == ROOT
+
+
+def test_column_calls_skip_call_site_capture(spark, monkeypatch):
+    """Without call-site capture a Column or DataFrame call is a few
+    py4j round trips; with it, 24 and 25."""
+    import py4j.clientserver as cs
+    from pyspark.errors import utils
+    assert spark.conf.get(DEBUGGING) == "false"
+    # PySpark caches the flag at its first wrapped call: read it afresh
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)
+    sent = []
+    send = cs.ClientServerConnection.send_command
+
+    def counted(self, command):
+        sent.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
+    df = spark.range(3)
+
+    def round_trips(fn):
+        fn()                    # the first call also reads the flag
+        sent.clear()
+        fn()
+        return len(sent)
+
+    assert round_trips(lambda: F.col("a") > 1) <= 4
+    assert round_trips(lambda: df.filter(F.col("id") > 1)) <= 5
+    assert utils._enable_debugging_cache is False
+
+
+def test_codegen_cache_holds_a_session_working_set(spark):
+    """60 distinct aggregate shapes (~125 generated classes) run twice:
+    the second run compiles nothing. Spark's default cache (100 entries
+    in 4 segments) recompiles ~120 of them."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    df = spark.range(64, numPartitions=2)
+
+    def run_shapes():
+        for k in range(2, 62):
+            df.groupBy((F.col("id") % 3).alias("g")).agg(
+                F.sum(F.col("id") * k).alias("s")).collect()
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+
+    compiled = run_shapes()
+    assert run_shapes() - compiled == 0
 
 
 def test_default_driver_memory_is_half_of_ram(monkeypatch):

@@ -62,3 +62,13 @@ def test_gate_stops_at_lost_jvm(monkeypatch, tmp_path, capsys):
     monkeypatch.setattr(co, "compare", lambda *a: 1 / 0)
     assert co.gate(names, None, str(tmp_path)) == 5
     assert capsys.readouterr().out.count("ZeroDivisionError") == 5
+
+
+def test_vanilla_session_puts_repo_root_on_worker_path():
+    """Python UDFs import the package on workers from any cwd; the
+    vanilla session keeps Spark's stock daemon."""
+    from tools import check_oracles as co
+    conf = co.VANILLA_CONF
+    assert conf["spark.executorEnv.PYTHONPATH"].split(os.pathsep) == [ROOT]
+    assert os.path.isdir(os.path.join(ROOT, "detanalysis_spark"))
+    assert "spark.python.daemon.module" not in conf

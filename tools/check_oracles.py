@@ -17,7 +17,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 import pandas as pd
@@ -98,21 +99,26 @@ def gate(names, spark, sf_dir: str = SF_DIR) -> int:
     return n_fail
 
 
+# A driver-like session: default configs, a deliberately non-UTC
+# timezone, none of the engine's session.py tuning. Queries must pass
+# here too, since the correctness harness supplies its own SparkSession.
+VANILLA_CONF = {
+    "spark.sql.session.timeZone": "America/New_York",
+    # reader capabilities, not engine tuning: without nanosAsLong Spark
+    # cannot load TIMESTAMP(NANOS) parquet at all (load_table's nano
+    # branch expects long nanos); without the repo root on the workers'
+    # path, Python UDFs cannot import the package unless the cwd is
+    # the repo root
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.executorEnv.PYTHONPATH": ROOT,
+    "spark.ui.enabled": "false",
+}
+
+
 def _vanilla_spark():
-    """A driver-like session: default configs, deliberately non-UTC
-    timezone, none of the engine's session.py tuning — queries must
-    pass here too, since the correctness harness supplies its own
-    SparkSession."""
     from pyspark.sql import SparkSession
     return (SparkSession.builder.appName("oracle-check-vanilla")
-            .master("local[8]")
-            .config("spark.sql.session.timeZone", "America/New_York")
-            # reader capability, not engine tuning: without it Spark
-            # cannot load TIMESTAMP(NANOS) parquet at all (load_table's
-            # nano branch expects long nanos)
-            .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-            .config("spark.ui.enabled", "false")
-            .getOrCreate())
+            .master("local[8]").config(map=VANILLA_CONF).getOrCreate())
 
 
 def main() -> int:
