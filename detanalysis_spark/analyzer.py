@@ -826,16 +826,14 @@ class Analyzer:
 
     def get_trace(self, channels: Sequence[str] | None, raw_path: "str | DataFrame",
                   series_number: int, event_number: int, **kwargs):
-        """Single-event fetch (S8, scatterplotter.py:112-202): point
-        predicate on the key columns, then the same array contract with
-        the leading event axis squeezed."""
+        """Single-event fetch (S8, scatterplotter.py:112-202): the point
+        predicate of ``traces.get_trace``, then the array contract of
+        ``get_traces`` with the leading event axis squeezed."""
+        from .traces import _as_array, get_trace
         traces = (self._spark.read.parquet(raw_path)
                   if isinstance(raw_path, str) else raw_path)
-        from .util import local_frame
-        keys = local_frame(
-            self._spark, [(int(series_number), int(event_number))],
-            "series_number long, event_number long")
-        from .traces import get_traces_array
-        arr, info = get_traces_array(traces, keys, channels=channels,
-                                     nb_events_limit=1, **kwargs)
+        sel = get_trace(traces, series_number, event_number)
+        if channels is not None and "channel" in sel.columns:
+            sel = sel.filter(F.col("channel").isin(list(channels)))
+        arr, info = _as_array(sel, **kwargs)
         return (arr[0] if arr.shape[0] else arr.reshape(arr.shape[1:])), info

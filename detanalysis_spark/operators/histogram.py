@@ -9,7 +9,8 @@ driver. At 100 TB the agg is map-side combined, so the shuffle carries
 at most ``shape × partitions`` rows regardless of input size.
 
 The bucket expression is plain column arithmetic (floor((x-lo)/w)) so it
-stays inside whole-stage codegen; no UDFs.
+stays inside whole-stage codegen; no UDFs. The photon spectrum fits bin
+through it too.
 """
 
 from __future__ import annotations
@@ -41,19 +42,30 @@ def resolve_limits(df: DataFrame, expression: str | Column,
     return lo, (lo + 1.0 if hi == lo else hi)
 
 
-def bucket_expr(col: Column, lo: float, hi: float, shape: int) -> Column:
-    """Bin index in [0, shape-1]; the top edge is inclusive in the last
-    bin (np.histogram convention, which the reference inherits)."""
+def bucket_expr(col: Column, lo: float | Column, hi: float | Column,
+                shape: int) -> Column:
+    """Bin index of ``shape`` equal-width bins over [lo, hi]: the top
+    edge is inclusive in the last bin (np.histogram convention, which
+    the reference inherits), clamped so a value rounding onto the top
+    edge stays in it too. ``lo``/``hi`` are floats or per-row Columns
+    (per-group bounds); an empty range takes width 1."""
+    lo, hi = F.lit(lo), F.lit(hi)
     w = (hi - lo) / shape
-    raw = F.floor((col - F.lit(lo)) / F.lit(w)).cast("int")
-    return F.when(col == F.lit(hi), F.lit(shape - 1)).otherwise(raw)
+    w = F.when(w == 0, 1.0).otherwise(w)
+    return F.least(F.floor((col - lo) / w).cast("int"), F.lit(shape - 1))
+
+
+def _in_range(col: Column, lo: float | Column,
+              hi: float | Column) -> Column:
+    """Non-NULL and inside the closed range [lo, hi]."""
+    return col.isNotNull() & (col >= lo) & (col <= hi)
 
 
 def bucket_agg(df: DataFrame, col: Column, lo: float, hi: float,
                shape: int, *aggs: Column) -> DataFrame:
     """``(bucket, *aggs)`` over the non-NULL rows inside [lo, hi] — the
     one bucket-keyed aggregate behind every 1-D histogram here."""
-    return (df.filter(col.isNotNull() & (col >= lo) & (col <= hi))
+    return (df.filter(_in_range(col, lo, hi))
               .groupBy(bucket_expr(col, lo, hi, shape).alias("bucket"))
               .agg(*aggs))
 
@@ -136,8 +148,7 @@ def hist2d(df: DataFrame, expr_x: str | Column, expr_y: str | Column,
     bx = bucket_expr(cx, lox, hix, sx)
     by = bucket_expr(cy, loy, hiy, sy)
     is_count = what.strip().startswith("count")
-    rows = (df.filter(cx.isNotNull() & cy.isNotNull()
-                      & (cx >= lox) & (cx <= hix) & (cy >= loy) & (cy <= hiy))
+    rows = (df.filter(_in_range(cx, lox, hix) & _in_range(cy, loy, hiy))
               .groupBy(bx.alias("bx"), by.alias("by"))
               .agg(what_agg(what).alias("count")).collect())
     grid = np.zeros((sx, sy), dtype=np.int64 if is_count else np.float64)

@@ -11,13 +11,15 @@ integral (:2063-2073). Re-expressed Spark-first:
   of events); the nonlinear fit runs driver-side on the ~200 collected
   bins — that is the right split at any scale. No scipy in this
   environment, so the bounded least-squares solver is a small pure-
-  numpy Levenberg–Marquardt with parameter clipping.
+  numpy Levenberg–Marquardt with parameter clipping. The single and
+  per-group fits share one bucket (``histogram.bucket_expr``) and one
+  comb-fit core (``_comb_fit``).
 - **Peak assignment is a native CASE expression** usable as an engine
   cut (no Python in the event loop).
 - **Trace averaging / FFT stats** are `posexplode → groupBy(peak,
   pos|bin)` aggregations — Spark's partial aggregation replaces the
   reference's per-peak numpy loops, distributed over the trace
-  ensemble.
+  ensemble; the FFT is ``traces.rfft_udf``.
 """
 
 from __future__ import annotations
@@ -29,9 +31,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .operators.histogram import bucket_agg, bucket_expr
 from .operators.stats import column_ranges
 from .traces import rfft_udf  # noqa: F401  (re-export convenience)
-from .util import blas_single_thread
+from .util import blas_single_thread, local_frame
 
 __all__ = [
     "model_spectrum", "default_guess", "default_bounds", "fit_spectrum",
@@ -209,41 +212,23 @@ def _auto_spacing(centers: np.ndarray, counts: np.ndarray,
 # ----------------------------------------------------------------------
 # distributed histogram → driver fit (photon_calibration.py:369-612)
 # ----------------------------------------------------------------------
-def fit_spectrum(df: DataFrame, amp_col: str, cut: Column | None = None,
-                 poisson: bool = False, eqspacing: bool = True,
-                 npeaks: int = 5, guess: list | None = None,
-                 bounds=None, bins: int = 200):
-    """Histogram the amplitude column distributed, then weighted
-    least-squares fit of the Gaussian comb on the collected bins.
-
-    np.histogram parity: equal-width edges over [min, max], rightmost
-    bin closed. Weights 1/√count, zero-count bins excluded — exactly
-    the reference's residual (:519-530).
-
-    Returns (popt, pcov, pstds, (bin_centers, counts)).
-    """
-    if bins < 2:
-        raise ValueError(f"bins must be >= 2, got {bins}")
-    if cut is not None:
-        df = df.filter(cut)
-    a = F.col(amp_col).cast("double")
-    lo, hi = map(float, column_ranges(df, [amp_col])[0])
+def _comb_fit(counts: np.ndarray, lo: float, hi: float, npeaks: int,
+              poisson: bool, eqspacing: bool, guess: list | None = None,
+              bounds=None):
+    """Weighted least-squares Gaussian-comb fit of one equal-width
+    histogram over [lo, hi] (photon_calibration.py:414-530): the
+    reference-shaped guess and bounds unless given, weights 1/√count
+    with zero-count bins excluded. Returns (popt, pcov, pstds, bin
+    centers, weighted residual sum of squares)."""
+    bins = counts.size
     width = (hi - lo) / bins or 1.0
-    idx = F.least(F.floor((a - lo) / width).cast("int"), F.lit(bins - 1))
-    hist = {r["b"]: r["n"] for r in
-            df.groupBy(idx.alias("b")).agg(
-                F.count(F.lit(1)).alias("n")).collect()}
-    counts = np.array([hist.get(b, 0) for b in range(bins)],
-                      dtype=np.float64)
     centers = lo + (np.arange(bins) + 0.5) * width
-
     if guess is None:
-        spacing_guess = _auto_spacing(centers, counts, width)
-        guess = default_guess(spacing_guess, 2 * width, float(counts.max()),
-                              npeaks, poisson, eqspacing)
+        guess = default_guess(_auto_spacing(centers, counts, width),
+                              2 * width, float(counts.max()), npeaks,
+                              poisson, eqspacing)
     if bounds is None:
         bounds = default_bounds(guess, npeaks, poisson, eqspacing)
-
     w = np.where(counts > 0, 1.0 / np.sqrt(np.where(counts > 0, counts, 1)),
                  0.0)
 
@@ -252,6 +237,36 @@ def fit_spectrum(df: DataFrame, amp_col: str, cut: Column | None = None,
                                         npeaks)) * w
 
     popt, pcov, pstds = least_squares_lm(resid, guess, bounds)
+    r = resid(popt)
+    return popt, pcov, pstds, centers, float(r @ r)
+
+
+def fit_spectrum(df: DataFrame, amp_col: str, cut: Column | None = None,
+                 poisson: bool = False, eqspacing: bool = True,
+                 npeaks: int = 5, guess: list | None = None,
+                 bounds=None, bins: int = 200):
+    """Histogram the amplitude column distributed, then weighted
+    least-squares fit of the Gaussian comb on the collected bins.
+
+    np.histogram parity: equal-width edges over [min, max], rightmost
+    bin closed (``histogram.bucket_agg``, NULL amplitudes skipped).
+    Weights 1/√count, zero-count bins excluded — exactly the
+    reference's residual (:519-530).
+
+    Returns (popt, pcov, pstds, (bin_centers, counts)).
+    """
+    if bins < 2:
+        raise ValueError(f"bins must be >= 2, got {bins}")
+    if cut is not None:
+        df = df.filter(cut)
+    lo, hi = map(float, column_ranges(df, [amp_col])[0])
+    hist = {r["bucket"]: r["n"] for r in
+            bucket_agg(df, F.col(amp_col).cast("double"), lo, hi, bins,
+                       F.count(F.lit(1)).alias("n")).collect()}
+    counts = np.array([hist.get(b, 0) for b in range(bins)],
+                      dtype=np.float64)
+    popt, pcov, pstds, centers, _ = _comb_fit(
+        counts, lo, hi, npeaks, poisson, eqspacing, guess, bounds)
     return popt, pcov, pstds, (centers, counts)
 
 
@@ -265,9 +280,10 @@ def fit_spectrum_grouped(df: DataFrame, amp_col: str, group_col: str,
     photon_calibration.py:369-612).
 
     Three stages, all distributed: per-group [min, max] (one agg,
-    broadcast back), per-(group, bin) counts (one shuffle), then
+    broadcast back), per-(group, bin) counts (one shuffle, binned by
+    ``histogram.bucket_expr`` with the group's bounds as Columns), then
     ``applyInPandas`` over groups — each task fits its group's
-    ``bins``-bin histogram with the same bounded-LM core the
+    ``bins``-bin histogram with the same comb-fit core the
     single-spectrum path uses, so ≤ ``bins`` rows per group ever move
     and the fits scale out with the number of groups.
 
@@ -279,13 +295,10 @@ def fit_spectrum_grouped(df: DataFrame, amp_col: str, group_col: str,
     df = df.filter(a.isNotNull() & ~F.isnan(a))   # null bin idx would
     mm = (df.groupBy(group_col)                    # poison the fit task
           .agg(F.min(a).alias("__lo__"), F.max(a).alias("__hi__")))
-    j = df.join(F.broadcast(mm), group_col)
-    w = (F.col("__hi__") - F.col("__lo__")) / bins
-    w = F.when(w == 0, F.lit(1.0)).otherwise(w)
-    idx = F.least(F.floor((a - F.col("__lo__")) / w).cast("int"),
-                  F.lit(bins - 1))
-    hist = (j.groupBy(F.col(group_col).cast("string").alias("group"),
-                      idx.alias("b"))
+    idx = bucket_expr(a, F.col("__lo__"), F.col("__hi__"), bins)
+    hist = (df.join(F.broadcast(mm), group_col)
+            .groupBy(F.col(group_col).cast("string").alias("group"),
+                     idx.alias("b"))
             .agg(F.count(F.lit(1)).alias("n"),
                  F.first("__lo__").alias("lo"),
                  F.first("__hi__").alias("hi")))
@@ -294,31 +307,17 @@ def fit_spectrum_grouped(df: DataFrame, amp_col: str, group_col: str,
                   "pstds array<double>, n_events long, fit_cost double")
 
     def fit_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        lo, hi = float(pdf["lo"].iloc[0]), float(pdf["hi"].iloc[0])
-        width = (hi - lo) / bins or 1.0
         counts = np.zeros(bins, dtype=np.float64)
         counts[pdf["b"].to_numpy()] = pdf["n"].to_numpy()
-        centers = lo + (np.arange(bins) + 0.5) * width
-        spacing_guess = _auto_spacing(centers, counts, width)
-        guess = default_guess(spacing_guess, 2 * width,
-                              float(counts.max()), npeaks, poisson,
-                              eqspacing)
-        bounds = default_bounds(guess, npeaks, poisson, eqspacing)
-        wts = np.where(counts > 0,
-                       1.0 / np.sqrt(np.where(counts > 0, counts, 1)), 0.0)
-
-        def resid(p):
-            return (counts - model_spectrum(centers, p, poisson,
-                                            eqspacing, npeaks)) * wts
-
-        popt, _, pstds = least_squares_lm(resid, guess, bounds)
-        r = resid(popt)
+        popt, _, pstds, _, cost = _comb_fit(
+            counts, float(pdf["lo"].iloc[0]), float(pdf["hi"].iloc[0]),
+            npeaks, poisson, eqspacing)
         return pd.DataFrame({
             "group": [pdf["group"].iloc[0]],
             "popt": [list(map(float, popt))],
             "pstds": [list(map(float, pstds))],
             "n_events": [int(counts.sum())],
-            "fit_cost": [float(r @ r)],
+            "fit_cost": [cost],
         })
 
     return hist.groupBy("group").applyInPandas(fit_one, out_schema)
@@ -422,8 +421,8 @@ def subtract_template_means(means: DataFrame, template: np.ndarray,
     """Subtract a template from every peak's mean pulse — the mean-frame
     half of ``subtract_crosstalk_template``
     (photon_calibration.py:1106-1190). Broadcast join on ``pos``."""
-    spark = means.sparkSession
-    tmpl = spark.createDataFrame(
+    tmpl = local_frame(
+        means.sparkSession,
         [(i, float(v)) for i, v in enumerate(np.asarray(template))],
         f"{pos_col} int, __tmpl__ double")
     return (means.join(F.broadcast(tmpl), pos_col, "left")
@@ -583,10 +582,10 @@ def dpdi_table(spark: SparkSession, dpdi: np.ndarray,
     rows = [(int(i), float(v.real), float(v.imag),
              float(e.real), float(e.imag))
             for i, (v, e) in enumerate(zip(dpdi, err))]
-    return spark.createDataFrame(
-        rows, schema="freq_index int, value_real double, "
-                     "value_imag double, err_real double, "
-                     "err_imag double")
+    return local_frame(spark, rows,
+                       "freq_index int, value_real double, "
+                       "value_imag double, err_real double, "
+                       "err_imag double")
 
 
 # ----------------------------------------------------------------------

@@ -38,7 +38,6 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, DoubleType, LongType,
@@ -103,9 +102,14 @@ def rechunk_stream(sdf: DataFrame, chunk_samples: int,
 
     Emits (channel, chunk_id, trace) with chunks of exactly
     ``chunk_samples``; the incomplete tail lives in state between
-    micro-batches and is dropped at end-of-stream.
+    micro-batches and is dropped at end-of-stream. The chop is the batch
+    ``vibration.rechunk_traces`` one, fed the carried tail.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    from ..vibration import _chopper
+
+    chop_rows = _chopper(chunk_samples, order_col, trace_col)
 
     def chop(key, pdfs, state: "GroupState"):
         if state.exists:
@@ -113,27 +117,8 @@ def rechunk_stream(sdf: DataFrame, chunk_samples: int,
             buf = np.asarray(buf_list, dtype=np.float64)
         else:
             next_chunk, buf = 0, np.empty(0, dtype=np.float64)
-        # a large group spans several Arrow batches (10k-row default)
-        # whose relative order is shuffle-arbitrary: collect ALL of the
-        # micro-batch's segments first, then sort by order_col once, so
-        # within-batch concatenation order is deterministic at any
-        # group size (cross-batch order remains arrival order)
-        segs: list = []
-        for pdf in pdfs:
-            segs.extend(zip(pdf[order_col].to_numpy(),
-                            (np.asarray(t, dtype=np.float64)
-                             for t in pdf[trace_col])))
-        segs.sort(key=lambda p: p[0])
-        stream = np.concatenate([buf] + [t for _, t in segs])
-        n_chunks = stream.size // chunk_samples
-        out = pd.DataFrame({
-            "channel": [key[0]] * n_chunks,
-            "chunk_id": np.arange(next_chunk, next_chunk + n_chunks),
-            "trace": [stream[i * chunk_samples:(i + 1) * chunk_samples]
-                      for i in range(n_chunks)],
-        })
-        remainder = stream[n_chunks * chunk_samples:]
-        state.update((int(next_chunk + n_chunks),
+        out, remainder = chop_rows(key[0], next_chunk, buf, pdfs)
+        state.update((int(next_chunk + len(out)),
                       [float(x) for x in remainder]))
         yield out
 

@@ -6978,315 +6978,3 @@ def data_quality_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         foreign_key("o_custkey", customer, "c_custkey"),
     ])
     return out.select("check", "n_rows", "n_violations")
-
-
-# ======================================================================
-# registration order epilogue
-#
-# The driver's correctness gate grades only the FIRST 50 registered
-# queries at sf0.01. Rounds 2 and 3 each graded a disjoint 50-query
-# window (CORRECTNESS_r02/r03.json); 18 oracled queries registered
-# after the round-3 reorder have never held an official driver grade.
-# Round-4 ordering: every oracled query with NO official grade (the 18
-# plus anything newly registered this round) fills the front of the
-# window; the remainder of the 50 slots re-grade already-green queries
-# (harmless, and catches regressions). Within each tier definition
-# order is preserved; nothing is added or removed.
-# ======================================================================
-_R02_GRADED = frozenset({
-    "flagship_event_cut_stats", "tpch_q1_pricing_summary",
-    "box_cut_counts", "global_filter_algebra", "cut_algebra_xor",
-    "semi_join_high_value", "anti_join_customers_no_orders",
-    "broadcast_part_revenue", "join_revenue_by_nation",
-    "percentile_quantity_by_flag", "robust_sigma_by_event_type",
-    "hist1d_event_value", "hist2d_quantity_discount",
-    "passage_fraction_counts", "passfrac_sequential_matrix",
-    "ntile_time_bins", "uneven_bins_extendedprice",
-    "topk_orders_per_priority", "union_all_scan",
-    "distinct_event_types", "time_binned_count_exclusion",
-    "doc_token_stats", "dedup_exact_documents", "semiauto_sigma_cut",
-    "semiauto_time_binned_cut", "semiauto_ofamp_binned_cut",
-    "semiauto_count_cut", "semiauto_interval_cut",
-    "semiauto_master_combine", "array_baseline_centered_mean",
-    "array_energy_by_label", "lowpass_kernel_embeddings",
-    "dedup_exact_by_key", "near_dup_pairs_minhash",
-    "near_dup_cluster_sizes", "text_quality_by_source",
-    "language_id_counts", "doc_fingerprint_stats", "ann_cosine_topk",
-    "ann_lsh_topk", "simhash_candidate_distances",
-    "vibration_sweep_moments", "vibration_psd_by_channel",
-    "vibration_transfer_functions", "photon_peak_counts",
-    "photon_average_pulses", "photon_fft_dpdi",
-    "streaming_event_counts", "multimodal_image_stats",
-    "polynomial_cut_counts",
-})
-
-
-# The round-3 driver window (keys of CORRECTNESS_r03.json, all green):
-_R03_GRADED = frozenset({
-    "adaptive_quality_stats", "ann_ivf_topk", "asof_join_purchase_error_lag",
-    "bigram_nll_scores", "boilerplate_removal_stats", "bpe_first_merge_pairs",
-    "curated_corpus_exact_stats", "data_quality_orders", "decontamination_stats",
-    "domain_cap_counts", "embedding_centroids_by_label", "embedding_covariance_stats",
-    "embedding_near_dup_pairs", "embedding_outlier_stats", "embedding_quantization_stats",
-    "gapfilled_daily_series", "gopher_rule_counts", "hashed_classifier_scores",
-    "incremental_append_ids", "incremental_dedup_stats", "incremental_rollup_stats",
-    "k_anonymity_events", "key_skew_profile_orders", "line_dedup_first_occurrence",
-    "manifest_pruned_scan", "merged_interval_islands", "mixture_sample_stats",
-    "nearest_event_pick", "orders_table_profile", "pii_redaction_stats",
-    "range_join_value_intervals", "rank_normalized_quality", "repetition_char_frac_stats",
-    "repetition_quality_stats", "salted_join_brand_revenue", "semantic_curation_stats",
-    "semantic_dedup_stats", "sequence_packing_stats", "sessionized_event_counts",
-    "snapshot_diff_counts", "span_dedup_stats", "split_assignment_counts",
-    "streaming_session_stats", "tfidf_top_terms", "token_cosine_near_dup",
-    "training_pipeline_stats", "trimmed_price_stats", "unigram_nll_scores",
-    "vocab_top_terms", "weighted_sample_stats",
-})
-
-# The round-4 driver window (keys of CORRECTNESS_r04.json, all green):
-_R04_GRADED = frozenset({
-    "anti_join_customers_no_orders", "box_cut_counts",
-    "broadcast_part_revenue", "chunked_documents_stats", "cut_algebra_xor",
-    "dedup_exact_documents", "describe_events", "distinct_event_types",
-    "doc_token_stats", "eqfreq_binned_passfrac", "every_nth_downsample",
-    "flagship_event_cut_stats", "global_filter_algebra",
-    "grouped_regression_stats", "hist1d_event_value", "hist1d_mean_quantity",
-    "hist2d_quantity_discount", "join_revenue_by_nation", "json_props_stats",
-    "master_randoms_passfrac", "moving_avg_event_value",
-    "multimodal_audio_stats", "multimodal_flac_stats",
-    "multimodal_jpeg_stats", "normalized_dedup_groups", "ntile_time_bins",
-    "passage_fraction_counts", "passfrac_sequential_matrix",
-    "passfrac_trigger_splits", "percentile_quantity_by_flag",
-    "pivot_priority_by_status", "robust_sigma_by_event_type",
-    "rollup_order_revenue", "saved_selection_counts", "semi_join_high_value",
-    "semiauto_count_cut", "semiauto_interval_cut",
-    "semiauto_ofamp_binned_cut", "semiauto_sigma_cut",
-    "semiauto_time_binned_cut", "streaming_ann_microbatch_topk",
-    "streaming_rollup_day_stats", "streaming_windowed_stats",
-    "time_binned_count_exclusion", "token_budget_sample_stats",
-    "topk_orders_per_priority", "tpch_q1_pricing_summary",
-    "training_batch_stats", "uneven_bins_extendedprice", "union_all_scan",
-})
-
-_R05_GRADED = frozenset({
-    "adaptive_quality_stats", "ann_ivf_topk",
-    "anti_join_customers_no_orders", "approx_percentile_profile",
-    "array_baseline_centered_mean", "array_energy_by_label",
-    "box_cut_counts", "broadcast_part_revenue",
-    "curated_corpus_exact_stats", "curated_corpus_stats",
-    "cut_algebra_xor", "dedup_exact_documents", "distinct_event_types",
-    "doc_token_stats", "embedding_near_dup_pairs",
-    "flagship_event_cut_stats", "global_filter_algebra",
-    "gopher_rule_counts", "grouped_spectrum_fits", "hist1d_event_value",
-    "hist2d_quantity_discount", "join_revenue_by_nation",
-    "lowpass_kernel_embeddings", "near_dup_cluster_sizes",
-    "ntile_time_bins", "passage_fraction_counts",
-    "passfrac_sequential_matrix", "percentile_quantity_by_flag",
-    "repetition_char_frac_stats", "repetition_quality_stats",
-    "robust_sigma_by_event_type", "semantic_curation_stats",
-    "semantic_dedup_stats", "semi_join_high_value", "semiauto_count_cut",
-    "semiauto_interval_cut", "semiauto_master_combine",
-    "semiauto_ofamp_binned_cut", "semiauto_sigma_cut",
-    "semiauto_time_binned_cut", "sketch_rollup_day_profile",
-    "streaming_ann_microbatch_topk", "streaming_psd_stats",
-    "theta_split_overlap", "time_binned_count_exclusion",
-    "topk_orders_per_priority", "tpch_q1_pricing_summary",
-    "training_pipeline_stats", "uneven_bins_extendedprice",
-    "union_all_scan",
-})
-
-# Rounds 6 AND 7 graded the identical window (the r6-close rotation
-# bug VERDICT r7 flagged: this set was missing from _DRIVER_GRADED, so
-# r7's tier1 re-selected r6's exact 50). One set records both.
-_R06_GRADED = frozenset({
-    "anti_join_customers_no_orders", "array_baseline_centered_mean",
-    "array_energy_by_label", "audio_fingerprint_pairs",
-    "bloom_incremental_dedup_stats", "bm25_retrieval_scores",
-    "box_cut_counts", "broadcast_part_revenue", "compacted_scan_stats",
-    "cut_algebra_xor", "dedup_exact_by_key", "dedup_exact_documents",
-    "distinct_event_types", "doc_token_stats", "domain_curation_stats",
-    "embedding_near_dup_pairs", "exact_stratified_sample_stats",
-    "flagship_event_cut_stats", "global_filter_algebra",
-    "hist1d_event_value", "hist2d_quantity_discount",
-    "html_extraction_stats", "image_phash_band_stats",
-    "interval_overlap_stats", "join_revenue_by_nation",
-    "jsonl_ingest_stats", "lowpass_kernel_embeddings",
-    "near_dup_cluster_sizes", "near_dup_pairs_minhash",
-    "ntile_time_bins", "orc_ingest_stats", "passage_fraction_counts",
-    "passfrac_sequential_matrix", "percentile_quantity_by_flag",
-    "pq_adc_exact_topk", "robust_sigma_by_event_type",
-    "semi_join_high_value", "semiauto_count_cut",
-    "semiauto_interval_cut", "semiauto_master_combine",
-    "semiauto_ofamp_binned_cut", "semiauto_sigma_cut",
-    "semiauto_time_binned_cut", "temperature_mixture_stats",
-    "term_pmi_stats", "time_binned_count_exclusion",
-    "topk_orders_per_priority", "tpch_q1_pricing_summary",
-    "uneven_bins_extendedprice", "union_all_scan",
-})
-
-def _grade_history() -> dict[str, int]:
-    """query → LATEST round it held an official driver grade, read
-    from the committed ``CORRECTNESS_r*.json`` artifacts at the repo
-    root. Reading the artifacts directly makes the rotation
-    self-maintaining: when the driver lands a new round's file, the
-    next import sees it — the mechanism can no longer go stale because
-    a round forgot to update a hand-kept frozenset (the VERDICT r7
-    process defect). Falls back to the static sets below when the
-    artifacts are absent (e.g. a bare checkout of the package only).
-    """
-    import glob as g
-    import json as j
-    import os as o
-    import re as r
-    root = o.path.dirname(o.path.dirname(o.path.abspath(__file__)))
-    latest: dict[str, int] = {}
-    for p in g.glob(o.path.join(root, "CORRECTNESS_r*.json")):
-        m = r.search(r"CORRECTNESS_r(\d+)\.json$", p)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(p) as f:
-                keys = list(j.load(f))
-        except (OSError, ValueError):
-            continue
-        for k in keys:
-            latest[k] = max(latest.get(k, 0), rnd)
-    return latest
-
-
-# $DETANALYSIS_NO_REORDER makes the import side-effect explicit: set
-# it (any non-empty value) to skip both the artifact scan and the
-# registry reorder — a packaged install without the repo-root
-# CORRECTNESS_r*.json artifacts then keeps declaration order instead
-# of silently ordering differently (VERDICT r9 low).
-import os as _os  # noqa: E402
-_NO_REORDER = bool(_os.environ.get("DETANALYSIS_NO_REORDER"))
-
-_LATEST_GRADE = {} if _NO_REORDER else _grade_history()
-if not _LATEST_GRADE:     # static fallback mirroring the artifacts
-    for _rnd, _s in ((2, _R02_GRADED), (3, _R03_GRADED),
-                     (4, _R04_GRADED), (5, _R05_GRADED),
-                     (6, _R06_GRADED), (7, _R06_GRADED)):
-        for _n in _s:
-            _LATEST_GRADE[_n] = max(_LATEST_GRADE.get(_n, 0), _rnd)
-
-_DRIVER_GRADED = frozenset(_LATEST_GRADE)
-_WINDOW = 50
-
-
-# Queries whose IMPLEMENTATION materially changed in round 6: their
-# official green grades predate the rewrite, so they must re-enter the
-# grading window ahead of untouched filler — otherwise a rewrite
-# regression would ship while the record shows green.
-_REWRITTEN_R06 = (
-    # cosine_near_dup_pairs exact path: per-dimension-group matmuls +
-    # broadcast probe matrices (ADVICE r5 medium fix)
-    "embedding_near_dup_pairs",
-)
-
-# Round-8 rewrites: re-grade ahead of untouched filler.
-_REWRITTEN_R08 = (
-    # provenance gates now route registered-domain through the exact
-    # PSL matcher (llm/psl.py) instead of the bounded heuristic
-    "domain_curation_stats",
-)
-
-# Round-9 rewrites: constructible-oracle upgrades (new planted inputs
-# AND new oracles), the WET octet-length/header_octets schema change,
-# the drained-pairs streaming verify, the curation hot-path rebuild
-# (sorted-run max_token_ratio, hits-only decontaminate, cleaning
-# barrier), the doubled PSL rule set, and the translate alpha check.
-_REWRITTEN_R09 = (
-    "ann_lsh_topk", "simhash_candidate_distances", "photon_fft_dpdi",
-    "lowpass_kernel_embeddings", "curated_corpus_stats",
-    "wet_ingest_stats", "streaming_near_dup_screen_stats",
-    "curated_corpus_exact_stats", "domain_curation_stats",
-    "repetition_quality_stats", "gopher_rule_counts",
-)
-
-# Round-10 rewrites: the complete vendored PSL rule set (the r9 L53
-# close — domain grouping now runs the full publicsuffix.org list),
-# cm-sketch embedded-geometry validation (both CM queries' lookup
-# path changed), and the PageRank per-round checkpoint + tol rework.
-_REWRITTEN_R10 = (
-    "domain_curation_stats", "cm_sketch_event_counts",
-    "streaming_cm_sketch_counts", "pagerank_doc_graph",
-    # adaptive tiers (VERDICT r9 #1): auto-selected exact/sketch trim
-    # band, auto-selected naive/MG heavy-hitter plan
-    "trimmed_price_stats", "heavy_hitter_tokens",
-    # rows-only tier -> 0 (VERDICT r9 #3): constructible oracles
-    "grouped_spectrum_fits", "approx_percentile_profile",
-)
-
-# Round-11 rewrites: the PSL hot-path rework (substring_index
-# candidates, memoized rule tables, two-level distinct-host agg), the
-# streaming-upsert tie-break + checkpoint-scoped replay guard, the
-# cm_lookup derive-path validation, and the multimodal decode loops'
-# quarantine restructuring (same default semantics, new row path).
-_REWRITTEN_R11 = (
-    "domain_curation_stats", "domain_cap_counts",
-    "streaming_upsert_stats", "upsert_merge_stats",
-    "cm_sketch_event_counts", "streaming_cm_sketch_counts",
-    "multimodal_image_stats", "multimodal_jpeg_stats",
-    "multimodal_audio_stats", "multimodal_flac_stats",
-    "image_phash_band_stats",
-)
-
-
-# Round-12 rewrites: the cross-spectral delta sink is now
-# replay-idempotent (partitionBy __batch_id__ + dynamic overwrite),
-# the image header sniffer gained the core-header-BMP / fill-byte-JPEG
-# branches with new planted classes in the survey, and the PSL
-# rule-table memo re-keyed (value + session weakref).
-_REWRITTEN_R12 = (
-    "streaming_cross_stats", "image_header_survey",
-    "domain_curation_stats",
-)
-
-
-def _reorder_registry() -> None:
-    # tier1: ANY query with no official driver grade — oracled (full
-    # hash gate) or rows-only (the no-SQL-oracle tier) — plus new
-    # round-6 registrations. These MUST land inside the 50-slot window
-    # so union coverage stays complete.
-    tier1 = [n for n in QUERIES if n not in _DRIVER_GRADED]
-    # tier1b: graded green before their latest rewrite — re-grade now.
-    # (_REWRITTEN_R06 entries were re-graded in the r06/r07 window, so
-    # only still-pending rewrites stay here.)
-    rewritten = [n for n in _REWRITTEN_R06
-                 if _LATEST_GRADE.get(n, 0) < 6]
-    rewritten += [n for n in _REWRITTEN_R08
-                  if _LATEST_GRADE.get(n, 0) < 8]
-    rewritten += [n for n in _REWRITTEN_R09
-                  if _LATEST_GRADE.get(n, 0) < 9]
-    rewritten += [n for n in _REWRITTEN_R10
-                  if _LATEST_GRADE.get(n, 0) < 10]
-    rewritten += [n for n in _REWRITTEN_R11
-                  if _LATEST_GRADE.get(n, 0) < 11]
-    rewritten += [n for n in _REWRITTEN_R12
-                  if _LATEST_GRADE.get(n, 0) < 12]
-    tier1b = [n for n in rewritten if n in QUERIES and n not in tier1]
-    # tier2..: already-green filler; staleness = the LATEST round a
-    # query was graded in (straight from the CORRECTNESS artifacts);
-    # stalest grades refresh first.
-    resit = set(tier1) | set(tier1b)
-    filler = sorted((n for n in QUERIES if n not in resit),
-                    key=lambda n: (_LATEST_GRADE.get(n, 0),
-                                   list(QUERIES).index(n)))
-    ordered = tier1 + tier1b + filler
-    assert sorted(ordered) == sorted(QUERIES)
-    assert len(tier1) + len(tier1b) <= _WINDOW, (
-        f"{len(tier1)} never-driver-graded + {len(tier1b)} "
-        f"rewritten queries exceed the {_WINDOW}-slot grading "
-        f"window; demote or swap before shipping")
-    for d in (QUERIES,):
-        items = {n: d[n] for n in ordered}
-        d.clear()
-        d.update(items)
-    oracle_items = {n: ORACLES[n] for n in ordered if n in ORACLES}
-    ORACLES.clear()
-    ORACLES.update(oracle_items)
-
-
-if not _NO_REORDER:
-    _reorder_registry()

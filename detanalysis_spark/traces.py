@@ -21,6 +21,8 @@ per-trace vector kernels (F-arr/U4) on Spark:
   energy integral — pure ``transform``/``aggregate``, whole-stage
   codegen) and Arrow-batched pandas UDFs where they genuinely need
   numpy (FFT, Butterworth low-pass) — never row-at-a-time Python UDFs.
+  ``rfft_udf`` is the engine's one Spark-side FFT and
+  ``_window_mean_subtract`` its one baseline subtraction.
 
 Scale notes (100 TB): waveforms dominate storage (12,500 doubles/row at
 the reference's 1.25 MHz × 10 ms envelope). Everything here either
@@ -78,8 +80,11 @@ def get_trace(traces: DataFrame, series_number: int, event_number: int,
 
     A point predicate on the partition/sort keys — with the trace table
     partitioned by ``series_number`` this prunes to one partition and
-    pushes ``event_number`` into the parquet row-group filter.
+    pushes ``event_number`` into the parquet row-group filter. Legacy
+    id-column spellings are normalized first, as in :func:`get_traces`.
     """
+    from .sources import normalize_legacy_columns
+    traces = normalize_legacy_columns(traces)
     out = traces.filter((F.col("series_number") == int(series_number))
                         & (F.col("event_number") == int(event_number)))
     if channel is not None and "channel" in traces.columns:
@@ -92,21 +97,27 @@ def get_trace(traces: DataFrame, series_number: int, event_number: int,
 # ----------------------------------------------------------------------
 def baseline_subtract(trace: Column | str, pretrigger_samples: int) -> Column:
     """Subtract the pre-trigger mean from every sample
-    (photon_calibration.py:990 ``np.mean(trace[:nb_pretrigger])``).
+    (photon_calibration.py:990 ``np.mean(trace[:nb_pretrigger])``):
+    :func:`_window_mean_subtract` over the window [0, k)."""
+    t = F.col(trace) if isinstance(trace, str) else trace
+    return _window_mean_subtract(t, 0, int(pretrigger_samples))
+
+
+def _window_mean_subtract(trace: Column, lo: int, hi: int) -> Column:
+    """``trace - mean(trace[lo:hi])``, the one baseline-subtract kernel.
 
     Pure built-in array expressions: ``slice`` + ``aggregate`` for the
-    baseline, ``transform`` for the subtraction — stays inside
-    whole-stage codegen, no UDF. The baseline scalar is bound as a
-    lambda variable (one-element-array transform): subtracting the
-    aggregate expression directly inside the ``transform`` lambda would
-    re-run the pre-trigger fold once per sample — O(k·n) per trace.
+    window mean, ``transform`` for the subtraction — stays inside
+    whole-stage codegen, no UDF. The mean is bound as a lambda variable
+    (one-element-array transform): subtracting the aggregate expression
+    directly inside the ``transform`` lambda would re-run the window
+    fold once per sample — O(k·n) per trace.
     """
-    t = F.col(trace) if isinstance(trace, str) else trace
-    k = int(pretrigger_samples)
-    base = F.aggregate(F.slice(t, 1, k), F.lit(0.0),
-                       lambda acc, x: acc + x) / F.lit(float(k))
+    base = (F.aggregate(F.slice(trace, lo + 1, hi - lo), F.lit(0.0),
+                        lambda acc, x: acc + x)
+            / F.lit(float(max(hi - lo, 1))))
     return F.flatten(F.transform(
-        F.array(base), lambda b: F.transform(t, lambda x: x - b)))
+        F.array(base), lambda b: F.transform(trace, lambda x: x - b)))
 
 
 def trace_energy(trace: Column | str, fs: float) -> Column:
@@ -155,7 +166,9 @@ def lowpass_filter_udf(fs: float, cutoff: float, order: int = 2):
 
 def rfft_udf(fs: float, onesided_psd_norm: bool = False,
              inv_sqrt_nfs: bool = False):
-    """Per-trace real FFT → struct of (re, im) arrays.
+    """Per-trace real FFT → struct of (re, im) arrays — the engine's one
+    Spark-side FFT (photon ensemble stats, vibration cross-spectra,
+    streaming auto-spectra).
 
     Used by the calibration/vibration paths (photon_calibration.py:1363,
     vibration_analyzer.py:344-364). With ``onesided_psd_norm`` the
@@ -163,7 +176,9 @@ def rfft_udf(fs: float, onesided_psd_norm: bool = False,
     convention, vibration_analyzer.py:352-358) except DC/Nyquist which
     scale by ``sqrt(1/(N*fs))``. With ``inv_sqrt_nfs`` every bin is
     scaled by the flat ``1/sqrt(N*fs)`` the photon-calibration path
-    uses (photon_calibration.py:1363).
+    uses (photon_calibration.py:1363). Each Arrow batch runs one stacked
+    ``np.fft.rfft`` per distinct trace length, so a batch may mix
+    lengths (N is each trace's own length).
     """
     fs = float(fs)
 
@@ -176,20 +191,23 @@ def rfft_udf(fs: float, onesided_psd_norm: bool = False,
 
     @F.pandas_udf(schema)
     def _rfft(traces: pd.Series) -> pd.DataFrame:
-        if traces.empty:
-            return pd.DataFrame({"re": [], "im": []})
-        mat = np.stack(traces.to_numpy())
-        spec = np.fft.rfft(mat, axis=1)
-        if onesided_psd_norm:
-            n = mat.shape[1]
-            scale = np.full(spec.shape[1], np.sqrt(2.0 / (n * fs)))
-            scale[0] = np.sqrt(1.0 / (n * fs))
-            if n % 2 == 0:
-                scale[-1] = np.sqrt(1.0 / (n * fs))
-            spec = spec * scale
-        elif inv_sqrt_nfs:
-            spec = spec / np.sqrt(mat.shape[1] * fs)
-        return pd.DataFrame({"re": list(spec.real), "im": list(spec.imag)})
+        rows = traces.to_numpy()
+        lengths = np.array([len(t) for t in rows], dtype=np.int64)
+        re, im = [None] * len(rows), [None] * len(rows)
+        for n in np.unique(lengths):
+            at = np.flatnonzero(lengths == n)
+            spec = np.fft.rfft(np.stack(rows[at]), axis=1)
+            if onesided_psd_norm:
+                scale = np.full(spec.shape[1], np.sqrt(2.0 / (n * fs)))
+                scale[0] = np.sqrt(1.0 / (n * fs))
+                if n % 2 == 0:
+                    scale[-1] = np.sqrt(1.0 / (n * fs))
+                spec = spec * scale
+            elif inv_sqrt_nfs:
+                spec = spec / np.sqrt(n * fs)
+            for i, r, m in zip(at, spec.real, spec.imag):
+                re[i], im[i] = r, m
+        return pd.DataFrame({"re": re, "im": im})
 
     return _rfft
 
@@ -221,11 +239,17 @@ def get_traces_array(traces: DataFrame, keys: DataFrame,
     """
     sel = get_traces(traces, keys, channels=channels,
                      nb_events_limit=nb_events_limit)
+    return _as_array(sel, baselinesub, baselineinds)
+
+
+def _as_array(sel: DataFrame, baselinesub: bool = False,
+              baselineinds: tuple[int, int] = (5, 100)):
+    """Collect fetched trace rows into the ``(ndarray[n_events,
+    n_channels, n_samples], info)`` contract, optionally subtracting
+    the mean of samples [lo, hi) from each trace first (distributed)."""
     trace_col = F.col("trace")
     if baselinesub:
-        lo, hi = baselineinds
-        base = _slice_mean(trace_col, lo, hi)
-        trace_col = F.transform(trace_col, lambda x: x - base)
+        trace_col = _window_mean_subtract(trace_col, *baselineinds)
     has_channel = "channel" in sel.columns
     cols = [c for c in TRACE_KEYS if c in sel.columns]
     pdf = sel.select(*cols, *(["channel"] if has_channel else []),
@@ -244,10 +268,3 @@ def get_traces_array(traces: DataFrame, keys: DataFrame,
         out[k_idx[k], c_idx[ch], :] = np.asarray(row.trace)
     info = [dict(zip(cols, k)) for k in key_tuples]
     return out, info
-
-
-def _slice_mean(trace: Column, lo: int, hi: int) -> Column:
-    """Mean of trace[lo:hi] as a scalar column (native fold)."""
-    n = max(hi - lo, 1)
-    return (F.aggregate(F.slice(trace, lo + 1, hi - lo),
-                        F.lit(0.0), lambda a, x: a + x) / F.lit(float(n)))

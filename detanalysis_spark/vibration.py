@@ -15,9 +15,9 @@ sample mean (:593-625). Re-expressed Spark-first:
 - **Sweep path** is a single ``groupBy(frequency_hz).agg(avg(...))``
   over native product expressions — one shuffle, map-side combined,
   whole-stage codegen. No Python touches the data.
-- **Continuous path** FFTs each trace in a vectorized pandas UDF
-  (Arrow batches), gathers channels per chunk with one shuffle, forms
-  the pair-product arrays natively (``zip_with``), and reduces with
+- **Continuous path** FFTs each trace with ``traces.rfft_udf``
+  (one-sided PSD scaling), gathers channels per chunk with one
+  shuffle, forms the pair-product arrays natively (``zip_with``), and reduces with
   ``posexplode → groupBy(freq_bin).avg`` — partial aggregation does
   the reference's "running sum" incrementally and distributed.
 - **PSD / TF derivations are pure column math** on the moment frame —
@@ -34,9 +34,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, DoubleType, StructField,
                                StructType)
 
+from .traces import rfft_udf
+
 __all__ = [
     "variance_of_mean", "sweep_moments", "psd_from_moments",
-    "transfer_functions", "fft_onesided_udf", "rechunk_traces",
+    "transfer_functions", "rechunk_traces",
     "continuous_moments", "every_nth", "MomentCache",
 ]
 
@@ -210,39 +212,37 @@ def every_nth(df: DataFrame, order_col: str, factor: int) -> DataFrame:
     return df.filter((F.col(order_col) % factor) == 0)
 
 
-_FFT_SCHEMA = StructType([
-    StructField("re", ArrayType(DoubleType())),
-    StructField("im", ArrayType(DoubleType())),
-])
+def _chopper(chunk_samples: int, order_col: str, trace_col: str):
+    """The one rechunk kernel, shared by :func:`rechunk_traces` (empty
+    carry) and ``streaming.rechunk_stream`` (the carried remainder).
 
-
-def fft_onesided_udf(sample_rate: float):
-    """pandas UDF: trace → one-sided-normalized rfft (re[], im[]).
-
-    |a|² is the one-sided PSD: interior bins scaled by 2/(fs·n), DC and
-    Nyquist by 1/(fs·n) (vibration_analyzer.py:346-356). Vectorized per
-    Arrow batch; traces in one batch may have differing lengths (the
-    scale is computed per length group).
+    ``chop(channel, first_chunk, carry, pdfs)`` sorts the trace
+    segments of ``pdfs`` by ``order_col``, appends them to the ``carry``
+    samples and cuts that stream into full chunks of ``chunk_samples``;
+    it returns the (channel, chunk_id, trace) frame, chunk ids counting
+    from ``first_chunk``, and the remainder. Built per call, so Spark
+    ships it to the Python workers by value rather than as an import of
+    this package.
     """
-    @F.pandas_udf(_FFT_SCHEMA)
-    def _fft(traces: pd.Series) -> pd.DataFrame:
-        res, ims = [], []
-        scales: dict[int, np.ndarray] = {}
-        for tr in traces:
-            x = np.asarray(tr, dtype=np.float64)
-            n = x.size
-            if n not in scales:
-                s = np.full(n // 2 + 1, 2.0 / (sample_rate * n))
-                s[0] = 1.0 / (sample_rate * n)
-                if n % 2 == 0:
-                    s[-1] = 1.0 / (sample_rate * n)
-                scales[n] = np.sqrt(s)
-            a = np.fft.rfft(x) * scales[n]
-            res.append(a.real)
-            ims.append(a.imag)
-        return pd.DataFrame({"re": res, "im": ims})
+    def chop(channel, first_chunk: int, carry: np.ndarray, pdfs):
+        # a large group spans several Arrow batches whose relative
+        # order is shuffle-arbitrary: gather every segment first, then
+        # sort once, so the concatenation order is deterministic
+        segs = [(o, t) for pdf in pdfs
+                for o, t in zip(pdf[order_col].to_numpy(), pdf[trace_col])]
+        segs.sort(key=lambda p: p[0])
+        stream = np.concatenate(
+            [carry] + [np.asarray(t, dtype=np.float64) for _, t in segs])
+        n = stream.size // chunk_samples
+        out = pd.DataFrame({
+            "channel": [channel] * n,
+            "chunk_id": np.arange(first_chunk, first_chunk + n),
+            "trace": [stream[i * chunk_samples:(i + 1) * chunk_samples]
+                      for i in range(n)],
+        })
+        return out, stream[n * chunk_samples:]
 
-    return _fft
+    return chop
 
 
 def rechunk_traces(df: DataFrame, chunk_samples: int,
@@ -264,21 +264,10 @@ def rechunk_traces(df: DataFrame, chunk_samples: int,
         StructField("chunk_id", df.schema[order_col].dataType),
         StructField("trace", ArrayType(DoubleType())),
     ])
-
-    def chop(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        stream = np.concatenate([np.asarray(t, dtype=np.float64)
-                                 for t in pdf[trace_col]])
-        n_chunks = stream.size // chunk_samples
-        ch = pdf[key_col].iloc[0]
-        return pd.DataFrame({
-            "channel": [ch] * n_chunks,
-            "chunk_id": np.arange(n_chunks),
-            "trace": [stream[i * chunk_samples:(i + 1) * chunk_samples]
-                      for i in range(n_chunks)],
-        })
-
-    return df.groupBy(key_col).applyInPandas(chop, schema=out_schema)
+    chop = _chopper(chunk_samples, order_col, trace_col)
+    return df.groupBy(key_col).applyInPandas(
+        lambda key, pdf: chop(key[0], 0, np.empty(0), [pdf])[0],
+        schema=out_schema)
 
 
 def cross_bin_products(chunks: DataFrame, channels: list[str],
@@ -300,7 +289,7 @@ def cross_bin_products(chunks: DataFrame, channels: list[str],
     twin's alignment contract: a micro-batch must carry every
     channel's samples for the chunk ids it completes).
     """
-    fft = fft_onesided_udf(sample_rate)(F.col(trace_col))
+    fft = rfft_udf(sample_rate, onesided_psd_norm=True)(F.col(trace_col))
     spec = chunks.select("channel", F.col(chunk_key).alias("__chunk__"),
                          fft.alias("a"))
 

@@ -132,3 +132,5 @@ def test_trace_fetch_legacy_column_names(spark):
                                  ["series_number", "event_number"])
     got = get_traces(traces, keys).collect()
     assert sorted(r.event_number for r in got) == [2, 5]
+    one = get_trace(traces, 1, 5).collect()
+    assert [r.event_number for r in one] == [5]

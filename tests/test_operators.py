@@ -935,3 +935,32 @@ def test_decrypt_quarantine_flags_bad_ciphertexts(spark):
 
     with pytest.raises(ValueError, match="on_error"):
         decrypt_columns(bad, ["name"], key, on_error="nope")
+
+
+def test_bucket_top_edge_one_ulp_below_hi(spark):
+    """A value one ulp below the top edge divides out to exactly
+    ``shape`` and must land in the last bin, as in NumPy: hist1d used to
+    drop it, hist2d raised IndexError, Semiautocut.histograms dropped
+    it from both counts."""
+    from detanalysis_spark.analyzer import EVENT_INDEX, Analyzer
+    from detanalysis_spark.semiautocut import Semiautocut
+
+    vals = [0.0, float(np.nextafter(1.0, 0.0)), 1.0]
+    want, _ = np.histogram(vals, bins=3, range=(0.0, 1.0))
+    assert list(want) == [1, 0, 2]
+    df = spark.createDataFrame([(v,) for v in vals], "x double")
+    counts, _ = hist1d(df, "x", shape=3, limits=(0.0, 1.0))
+    np.testing.assert_array_equal(counts, want)
+    grid, _, _ = hist2d(df, "x", "x", shape=3, limits_x=(0.0, 1.0),
+                        limits_y=(0.0, 1.0))
+    want2, _, _ = np.histogram2d(vals, vals, bins=3,
+                                 range=((0.0, 1.0), (0.0, 1.0)))
+    np.testing.assert_array_equal(grid, want2.astype(np.int64))
+
+    ana = Analyzer(spark.createDataFrame(list(enumerate(vals)),
+                                         f"`{EVENT_INDEX}` long, rq double"))
+    sac = Semiautocut(ana, "rq", cut_pars={"val_lower": 0.5})
+    sac.do_cut()
+    c_all, c_pass, _ = sac.histograms(shape=3, limits=(0.0, 1.0))
+    np.testing.assert_array_equal(c_all, want)
+    np.testing.assert_array_equal(c_pass, [0, 0, 2])

@@ -330,6 +330,38 @@ def test_subtract_template_trace_and_means(spark):
     assert got2[(0, 3)] == 11.0
 
 
+def test_small_model_frames_are_local_relations(spark):
+    """The template and dPdI tables are plan-local relations (the
+    ``util.local_frame`` path), not a parallelized RDD scan, which
+    costs a Python-worker round trip per call."""
+    means = util.local_frame(
+        spark, [(p, pos, 10.0) for p in (0, 1) for pos in range(4)],
+        "peak int, pos int, value double")
+    dpdi = np.array([1 + 1j, 2 - 1j, 0.5 + 0j])
+    for df in (P.subtract_template_means(means, np.arange(4.0)),
+               P.dpdi_table(spark, dpdi)):
+        qe = df._jdf.queryExecution()
+        assert "LocalRelation" in qe.optimizedPlan().toString()
+        assert "ExistingRDD" not in qe.executedPlan().toString()
+    rows = P.dpdi_table(spark, dpdi, dpdi * 0.1).orderBy("freq_index")
+    assert [(r.value_real, r.value_imag, r.err_real) for r in
+            rows.collect()] == pytest.approx(
+                [(1.0, 1.0, 0.1), (2.0, -1.0, 0.2), (0.5, 0.0, 0.05)])
+
+
+def test_fit_spectrum_skips_null_amplitudes(calib, spark):
+    """NULL amplitudes are not events of the spectrum: they stay out of
+    every bin (they used to be counted in the last one)."""
+    df, pdf = calib
+    nulls = spark.createDataFrame([(-1, -1, None)] * 50,
+                                  "event_id long, true_peak long, amp double")
+    _, _, _, (_, counts) = P.fit_spectrum(
+        df.unionByName(nulls), "amp", npeaks=NPEAKS,
+        guess=P.default_guess(SPACING, 0.4, 2000.0, NPEAKS), bins=50)
+    want, _ = np.histogram(pdf["amp"].to_numpy(), bins=50)
+    np.testing.assert_array_equal(counts, want)
+
+
 def test_save_obj_round_trip(spark):
     import json
 

@@ -111,6 +111,37 @@ def test_rfft_onesided_norm(spark):
     assert psd2.sum() * FS / N_SAMPLES == pytest.approx(np.mean(sig ** 2), rel=1e-9)
 
 
+def test_rfft_udf_mixed_lengths_in_one_batch(spark):
+    """Traces of different lengths in ONE Arrow batch: each row matches
+    its own NumPy FFT under every scaling (one-sided PSD with
+    DC/Nyquist at 1/(n·fs), flat 1/√(n·fs), none)."""
+    rng = np.random.default_rng(9)
+    sigs = [rng.normal(0, 1, n) for n in (N_SAMPLES, 50, 63, N_SAMPLES, 7)]
+    df = spark.createDataFrame([(i, [float(x) for x in s])
+                                for i, s in enumerate(sigs)],
+                               "i int, trace array<double>").coalesce(1)
+
+    def onesided(n):
+        scale = np.full(n // 2 + 1, np.sqrt(2.0 / (n * FS)))
+        scale[0] = np.sqrt(1.0 / (n * FS))
+        if n % 2 == 0:
+            scale[-1] = np.sqrt(1.0 / (n * FS))
+        return scale
+
+    for kw, scale in (({"onesided_psd_norm": True}, onesided),
+                      ({"inv_sqrt_nfs": True},
+                       lambda n: 1.0 / np.sqrt(n * FS)),
+                      ({}, lambda n: 1.0)):
+        rows = (df.select("i", T.rfft_udf(FS, **kw)("trace").alias("a"))
+                .orderBy("i").collect())
+        for row, sig in zip(rows, sigs):
+            want = np.fft.rfft(sig) * scale(sig.size)
+            np.testing.assert_allclose(row["a"]["re"], want.real,
+                                       rtol=1e-12, atol=1e-15)
+            np.testing.assert_allclose(row["a"]["im"], want.imag,
+                                       rtol=1e-12, atol=1e-15)
+
+
 def test_get_traces_array_shape_and_baseline(spark):
     from detanalysis_spark.traces import get_traces_array
     import numpy as np
@@ -133,6 +164,22 @@ def test_get_traces_array_shape_and_baseline(spark):
     arr2, _ = get_traces_array(traces, keys, baselinesub=True,
                                baselineinds=(0, 4))
     assert np.allclose(arr2, 0.0)     # constant traces null out
+
+    # non-constant traces and a window off sample 0: catches a wrong
+    # window or an off-by-one slice
+    rng = np.random.default_rng(5)
+    raw = {(ev, ch): rng.normal(3.0, 1.0, 12) for ev in range(3)
+           for ch in ("chA", "chB")}
+    noisy = spark.createDataFrame(
+        [(1, ev, ch, [float(x) for x in t]) for (ev, ch), t in raw.items()],
+        ["series_number", "event_number", "channel", "trace"])
+    arr4, info4 = get_traces_array(noisy, keys, baselinesub=True,
+                                   baselineinds=(2, 6))
+    assert [d["event_number"] for d in info4] == [0]
+    for c, ch in enumerate(("chA", "chB")):
+        t = raw[(0, ch)]
+        np.testing.assert_allclose(arr4[0, c], t - t[2:6].mean(),
+                                   rtol=1e-12, atol=1e-12)
 
     empty_keys = spark.createDataFrame([(9, 9)],
                                        ["series_number", "event_number"])
