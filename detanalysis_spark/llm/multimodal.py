@@ -24,8 +24,6 @@ rate, frame sampling — is real numpy.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -33,7 +31,9 @@ from pyspark.sql import functions as F
 
 from pyspark.sql.types import (ArrayType, BinaryType, DoubleType,
                                IntegerType, LongType, StringType,
-                               StructField, StructType)
+                               StructField)
+
+from ..util import _row_map
 
 
 __all__ = [
@@ -42,8 +42,8 @@ __all__ = [
     "audio_fingerprint", "audio_near_dup_pairs",
     "IMAGE_META_FIELDS", "AUDIO_META_FIELDS", "decode_raw8",
     "encode_raw8", "decode_png", "encode_png", "decode_wav",
-    "encode_wav", "resize_bilinear", "image_features_schema",
-    "image_features", "audio_features_schema", "audio_features",
+    "encode_wav", "resize_bilinear",
+    "image_features", "audio_features",
     "sample_frames", "frame_sample_udf",
     "sniff_image_header", "image_header_info",
 ]
@@ -394,27 +394,22 @@ def resize_bilinear(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
 # A 100-TB crawl ALWAYS carries some truncated / exotic / garbage
 # payloads; a fail-stop decode means one bad image among billions
 # kills the whole job after task retries. Every decode-bearing
-# operator therefore takes on_error:
+# operator therefore takes on_error and runs through the one
+# quarantine kernel, ``util._row_map``:
 #
-# - "raise" (default): current semantics — decode errors propagate
-#   (right for curated fixtures where a bad payload means a bug).
+# - "raise": decode errors propagate (right for curated fixtures
+#   where a bad payload means a bug) — the default everywhere except
+#   the header survey, which IS the intake audit.
 # - "quarantine": the row survives with NULL features plus a
 #   ``corrupt_reason`` string column (NULL for good rows) — the
 #   binary-payload mirror of read_jsonl_quarantine's __corrupt__
 #   sentinel (sources/textio.py). One scan, no second pass; callers
 #   split good/bad with a filter on corrupt_reason.
+#
+# Each operator below is its output field list plus a per-row
+# function; the kernel owns the on_error check, the try/except, the
+# NULL fill and the reason format.
 # ----------------------------------------------------------------------
-_ON_ERROR = ("raise", "quarantine")
-
-
-def _check_on_error(on_error: str) -> None:
-    if on_error not in _ON_ERROR:
-        raise ValueError(
-            f"on_error must be one of {_ON_ERROR} — got {on_error!r}")
-
-
-def _corrupt_reason(exc: BaseException) -> str:
-    return f"{type(exc).__name__}: {exc}"[:200]
 
 
 # ----------------------------------------------------------------------
@@ -506,61 +501,19 @@ def image_header_info(df: DataFrame, id_col: str,
     costs a marker scan instead of a pixel decode. Arrow-batched;
     default ``on_error="quarantine"`` because a header survey IS the
     intake audit (pass ``"raise"`` for curated fixtures)."""
-    _check_on_error(on_error)
-    quarantine = on_error == "quarantine"
-    id_field = df.schema[id_col]
-    fields = [id_field,
-              StructField("format", StringType()),
-              StructField("width", IntegerType()),
-              StructField("height", IntegerType())]
-    if quarantine:
-        fields.append(StructField("corrupt_reason", StringType()))
-    schema = StructType(fields)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fmts, ws, hs, reasons = [], [], [], [], []
-            for r in pdf.itertuples(index=False):
-                ids.append(getattr(r, id_col))
-                try:
-                    fmt, w, h = sniff_image_header(bytes(r.payload))
-                except Exception as e:   # noqa: BLE001
-                    if not quarantine:
-                        raise
-                    fmts.append(None)
-                    ws.append(None)
-                    hs.append(None)
-                    reasons.append(_corrupt_reason(e))
-                    continue
-                fmts.append(fmt)
-                ws.append(w)
-                hs.append(h)
-                reasons.append(None)
-            out = {id_col: ids, "format": fmts, "width": ws,
-                   "height": hs}
-            if quarantine:
-                out["corrupt_reason"] = reasons
-            yield pd.DataFrame(out)
-
-    sel = df.select(id_col, payload_col) \
-            .withColumnRenamed(payload_col, "payload")
-    return sel.mapInPandas(run, schema)
+    return _row_map(df, id_col, [payload_col],
+                    [StructField("format", StringType()),
+                     StructField("width", IntegerType()),
+                     StructField("height", IntegerType())],
+                    lambda payload: sniff_image_header(bytes(payload)),
+                    on_error)
 
 
 # ----------------------------------------------------------------------
-# image features via mapInPandas
+# image features
 # ----------------------------------------------------------------------
-def image_features_schema(id_field: StructField,
-                          quarantine: bool = False) -> StructType:
-    fields = [
-        id_field,
-        StructField("mean_lum", DoubleType()),
-        StructField("std_lum", DoubleType()),
-        StructField("resized", ArrayType(DoubleType())),
-    ]
-    if quarantine:
-        fields.append(StructField("corrupt_reason", StringType()))
-    return StructType(fields)
+# the decode inputs after the payload column
+_IMAGE_INPUTS = ["width", "height", "channels", "format"]
 
 
 def image_features(df: DataFrame, id_col: str, out_w: int = 4,
@@ -575,59 +528,22 @@ def image_features(df: DataFrame, id_col: str, out_w: int = 4,
     ``corrupt_reason`` column and keeps undecodable rows (NULL
     features) instead of failing the job.
     """
-    _check_on_error(on_error)
-    quarantine = on_error == "quarantine"
-    schema = image_features_schema(df.schema[id_col], quarantine)
+    def row(payload, width, height, channels, fmt):
+        img = _decode(payload, width, height, channels, fmt)
+        lum = img.mean(axis=2)
+        return (float(lum.mean()), float(lum.std()),
+                resize_bilinear(img, out_w, out_h).mean(axis=2).ravel())
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, means, stds, thumbs, reasons = [], [], [], [], []
-            for r in pdf.itertuples(index=False):
-                ids.append(getattr(r, id_col))
-                try:
-                    img = _decode(r.payload, r.width, r.height,
-                                  r.channels, r.format)
-                except Exception as e:   # noqa: BLE001
-                    if not quarantine:
-                        raise
-                    means.append(None)
-                    stds.append(None)
-                    thumbs.append(None)
-                    reasons.append(_corrupt_reason(e))
-                    continue
-                lum = img.mean(axis=2)
-                means.append(float(lum.mean()))
-                stds.append(float(lum.std()))
-                thumbs.append(resize_bilinear(
-                    img, out_w, out_h).mean(axis=2).ravel())
-                reasons.append(None)
-            out = {id_col: ids, "mean_lum": means,
-                   "std_lum": stds, "resized": thumbs}
-            if quarantine:
-                out["corrupt_reason"] = reasons
-            yield pd.DataFrame(out)
-
-    cols = [id_col, payload_col, "width", "height", "channels", "format"]
-    sel = df.select(*cols).withColumnRenamed(payload_col, "payload")
-    return sel.mapInPandas(run, schema)
+    return _row_map(df, id_col, [payload_col, *_IMAGE_INPUTS],
+                    [StructField("mean_lum", DoubleType()),
+                     StructField("std_lum", DoubleType()),
+                     StructField("resized", ArrayType(DoubleType()))],
+                    row, on_error)
 
 
 # ----------------------------------------------------------------------
 # audio features (int16 little-endian PCM payloads)
 # ----------------------------------------------------------------------
-def audio_features_schema(id_field: StructField,
-                          quarantine: bool = False) -> StructType:
-    fields = [
-        id_field,
-        StructField("rms", DoubleType()),
-        StructField("zcr", DoubleType()),
-        StructField("frame_energy", ArrayType(DoubleType())),
-    ]
-    if quarantine:
-        fields.append(StructField("corrupt_reason", StringType()))
-    return StructType(fields)
-
-
 def _audio_decode(payload: bytes, payload_format: str) -> np.ndarray:
     """Shared mono-mixdown decode for the audio operators."""
     if payload_format == "WAV":
@@ -656,43 +572,21 @@ def audio_features(df: DataFrame, id_col: str, frame_samples: int = 256,
     """
     if payload_format not in ("PCM16", "WAV", "FLAC"):
         raise ValueError(f"unsupported payload_format {payload_format!r}")
-    _check_on_error(on_error)
-    quarantine = on_error == "quarantine"
-    schema = audio_features_schema(df.schema[id_col], quarantine)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rmss, zcrs, energies, reasons = [], [], [], [], []
-            for r in pdf.itertuples(index=False):
-                ids.append(getattr(r, id_col))
-                try:
-                    x = _audio_decode(r.payload, payload_format)
-                except Exception as e:   # noqa: BLE001
-                    if not quarantine:
-                        raise
-                    rmss.append(None)
-                    zcrs.append(None)
-                    energies.append(None)
-                    reasons.append(_corrupt_reason(e))
-                    continue
-                rmss.append(float(np.sqrt(np.mean(x ** 2))) if x.size
-                            else 0.0)
-                zcrs.append(float(np.mean(np.signbit(x[1:])
-                                          != np.signbit(x[:-1])))
-                            if x.size > 1 else 0.0)
-                nf = x.size // frame_samples
-                fr = x[:nf * frame_samples].reshape(nf, frame_samples)
-                energies.append((fr ** 2).sum(axis=1))
-                reasons.append(None)
-            out = {id_col: ids, "rms": rmss, "zcr": zcrs,
-                   "frame_energy": energies}
-            if quarantine:
-                out["corrupt_reason"] = reasons
-            yield pd.DataFrame(out)
+    def row(payload):
+        x = _audio_decode(payload, payload_format)
+        rms = float(np.sqrt(np.mean(x ** 2))) if x.size else 0.0
+        zcr = (float(np.mean(np.signbit(x[1:]) != np.signbit(x[:-1])))
+               if x.size > 1 else 0.0)
+        nf = x.size // frame_samples
+        fr = x[:nf * frame_samples].reshape(nf, frame_samples)
+        return rms, zcr, (fr ** 2).sum(axis=1)
 
-    sel = df.select(id_col, payload_col) \
-            .withColumnRenamed(payload_col, "payload")
-    return sel.mapInPandas(run, schema)
+    return _row_map(df, id_col, [payload_col],
+                    [StructField("rms", DoubleType()),
+                     StructField("zcr", DoubleType()),
+                     StructField("frame_energy", ArrayType(DoubleType()))],
+                    row, on_error)
 
 
 # ----------------------------------------------------------------------
@@ -757,44 +651,18 @@ def image_phash(df: DataFrame, id_col: str, method: str = "ahash",
     undecodable rows (NULL phash) instead of failing the job."""
     if method not in ("ahash", "dhash"):
         raise ValueError(f"image_phash: unknown method {method!r}")
-    _check_on_error(on_error)
-    quarantine = on_error == "quarantine"
     w, h = (9, 8) if method == "dhash" else (8, 8)
     hash_fn = dhash_array if method == "dhash" else ahash_array
-    id_field = df.schema[id_col]
-    fields = [id_field, StructField("phash", LongType())]
-    if quarantine:
-        fields.append(StructField("corrupt_reason", StringType()))
-    schema = StructType(fields)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes, reasons = [], [], []
-            for r in pdf.itertuples(index=False):
-                ids.append(getattr(r, id_col))
-                try:
-                    img = _decode(r.payload, r.width, r.height,
-                                  r.channels, r.format)
-                except Exception as e:   # noqa: BLE001
-                    if not quarantine:
-                        raise
-                    hashes.append(None)
-                    reasons.append(_corrupt_reason(e))
-                    continue
-                lum = img.mean(axis=2)
-                if lum.shape != (h, w):
-                    lum = resize_bilinear(
-                        img, w, h).mean(axis=2)
-                hashes.append(hash_fn(lum))
-                reasons.append(None)
-            out = {id_col: ids, "phash": hashes}
-            if quarantine:
-                out["corrupt_reason"] = reasons
-            yield pd.DataFrame(out)
+    def row(payload, width, height, channels, fmt):
+        img = _decode(payload, width, height, channels, fmt)
+        lum = img.mean(axis=2)
+        if lum.shape != (h, w):
+            lum = resize_bilinear(img, w, h).mean(axis=2)
+        return (hash_fn(lum),)
 
-    cols = [id_col, payload_col, "width", "height", "channels", "format"]
-    sel = df.select(*cols).withColumnRenamed(payload_col, "payload")
-    return sel.mapInPandas(run, schema)
+    return _row_map(df, id_col, [payload_col, *_IMAGE_INPUTS],
+                    [StructField("phash", LongType())], row, on_error)
 
 
 def image_near_dup_pairs(df: DataFrame, id_col: str,
@@ -818,7 +686,6 @@ def image_near_dup_pairs(df: DataFrame, id_col: str,
     pair).
     """
     from .dedup import _hamming_band_pairs
-    _check_on_error(on_error)
     hashes = image_phash(df, id_col, method=method,
                          payload_col=payload_col, on_error=on_error)
     if on_error == "quarantine":
@@ -906,38 +773,15 @@ def audio_fingerprint(df: DataFrame, id_col: str,
             f"audio_fingerprint: frame_samples={frame_samples} gives "
             f"{int(frame_samples) // 2} usable FFT bins — need at "
             f"least 10 (frame_samples >= 20)")
-    _check_on_error(on_error)
-    quarantine = on_error == "quarantine"
-    id_field = df.schema[id_col]
-    fields = [id_field, StructField("fingerprint", LongType())]
-    if quarantine:
-        fields.append(StructField("corrupt_reason", StringType()))
-    schema = StructType(fields)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fps, reasons = [], [], []
-            for r in pdf.itertuples(index=False):
-                ids.append(getattr(r, id_col))
-                try:
-                    x = _audio_decode(r.payload, payload_format)
-                except Exception as e:   # noqa: BLE001
-                    if not quarantine:
-                        raise
-                    fps.append(None)
-                    reasons.append(_corrupt_reason(e))
-                    continue
-                fps.append(audio_fingerprint_array(
-                    np.asarray(x, dtype=np.float64), frame_samples))
-                reasons.append(None)
-            out = {id_col: ids, "fingerprint": fps}
-            if quarantine:
-                out["corrupt_reason"] = reasons
-            yield pd.DataFrame(out)
+    def row(payload):
+        x = _audio_decode(payload, payload_format)
+        return (audio_fingerprint_array(np.asarray(x, dtype=np.float64),
+                                        frame_samples),)
 
-    sel = df.select(id_col, payload_col) \
-            .withColumnRenamed(payload_col, "payload")
-    return sel.mapInPandas(run, schema)
+    return _row_map(df, id_col, [payload_col],
+                    [StructField("fingerprint", LongType())], row,
+                    on_error)
 
 
 def audio_near_dup_pairs(df: DataFrame, id_col: str,
@@ -956,7 +800,6 @@ def audio_near_dup_pairs(df: DataFrame, id_col: str,
     ``on_error="quarantine"`` drops undecodable clips from the pair
     search instead of failing the job."""
     from .dedup import _hamming_band_pairs
-    _check_on_error(on_error)
     fps = audio_fingerprint(df, id_col, payload_col=payload_col,
                             payload_format=payload_format,
                             frame_samples=frame_samples,

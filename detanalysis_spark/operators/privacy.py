@@ -22,6 +22,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import _quarantine_mode
+
 __all__ = ["k_anonymity_profile", "suppress_small_groups"]
 
 
@@ -120,13 +122,11 @@ def decrypt_columns(df: DataFrame, cols, key: str,
     multimodal/JSONL/WET quarantines."""
     if isinstance(cols, str):
         cols = [cols]
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(
-            f"on_error must be 'raise' or 'quarantine', got {on_error!r}")
+    quarantine = _quarantine_mode(on_error)
     mode = "ECB" if deterministic else "GCM"
     out = df
     for c in cols:
-        if on_error == "quarantine":
+        if quarantine:
             dec = F.try_aes_decrypt(F.col(c), F.lit(key), F.lit(mode))
             out = (out.withColumn(
                        c + "__corrupt",

@@ -28,32 +28,15 @@ corrupt-record column.
 
 from __future__ import annotations
 
-from ..util import local_frame
+from ..util import _ddl_columns, _row_map, local_frame
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 __all__ = ["read_jsonl", "read_jsonl_quarantine", "write_jsonl",
            "read_csv_corpus", "stream_jsonl_quarantine",
            "read_wet", "write_wet", "stream_wet",
            "read_warc", "write_warc", "stream_warc"]
-
-
-def _top_level_ddl_names(ddl: str) -> list[str]:
-    """First token of each depth-0 comma-separated DDL field (tracks
-    <...> nesting so struct members don't count as columns)."""
-    names, depth, start = [], 0, 0
-    for i, ch in enumerate(ddl + ","):
-        if ch == "<":
-            depth += 1
-        elif ch == ">":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            piece = ddl[start:i].strip()
-            if piece:
-                names.append(piece.split()[0].strip("`"))
-            start = i + 1
-    return names
 
 
 def read_jsonl_quarantine(spark: SparkSession, path: str,
@@ -80,16 +63,11 @@ def _parse_jsonl_lines(lines: DataFrame, schema: StructType | str
     """(good, bad) from a one-column ``value string`` frame of raw
     lines — pure projections/filters, so the SAME code path serves
     batch reads and Structured Streaming sources."""
-    if isinstance(schema, str):
-        ddl = schema
-        top_names = _top_level_ddl_names(schema)
-    else:
-        ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                        for f in schema.fields)
-        top_names = list(schema.fieldNames())
+    cols = _ddl_columns(schema)
+    ddl = ", ".join(f for _, f in cols)
     # only a TOP-LEVEL column collides with columnNameOfCorruptRecord;
     # nested struct fields named __corrupt__ are legal
-    if "__corrupt__" in top_names:
+    if "__corrupt__" in [name for name, _ in cols]:
         raise ValueError(
             "read_jsonl: the schema may not contain a top-level "
             "__corrupt__ column (reserved for the corrupt-record "
@@ -188,11 +166,16 @@ def read_wet(spark: SparkSession, path: str,
     return _parse_wet_files(raw, record_types)
 
 
-def _parse_wet_files(raw: DataFrame,
-                     record_types: tuple[str, ...] | None) -> DataFrame:
-    """Shared WET parse plan (projections/filters only, so the batch
-    and streaming readers are row-identical by construction).
-    ``raw``: (source_file, value) with value = one whole file."""
+def _parse_records(raw: DataFrame,
+                   record_types: tuple[str, ...] | None,
+                   columns) -> DataFrame:
+    """The one WARC record framer behind the WET and full-WARC readers
+    (projections/filters only, so the batch and streaming readers are
+    row-identical by construction). ``raw``: (source_file, value) with
+    value = one whole file. Records split on the version line, then
+    into header block and payload; ``columns(payload, h)`` gives the
+    columns after ``(source_file, warc_type)``, where ``h(name)``
+    extracts one WARC header."""
     rec = F.explode(F.slice(
         F.split(F.col("value"), r"(?m)^WARC/\d+\.\d+\r?\n"),
         2, 2_147_483_646)).alias("rec")
@@ -210,29 +193,91 @@ def _parse_wet_files(raw: DataFrame,
     out = recs.select(
         "source_file",
         F.lower(h("WARC-Type")).alias("warc_type"),
-        h("WARC-Target-URI").alias("target_uri"),
-        h("WARC-Date").alias("warc_date"),
-        h("Content-Length").try_cast("long").alias("content_length"),
-        payload.alias("payload"))
+        *columns(payload, h))
     if record_types is not None:
         out = out.filter(F.col("warc_type").isin(
             [t.lower() for t in record_types]))
     return out
 
 
-def _stream_shard_text(spark: SparkSession, path: str, glob: str,
-                       max_files_per_trigger: int | None,
-                       max_shard_bytes: int, who: str) -> DataFrame:
-    """Shared streaming shard decoder behind :func:`stream_wet` and
-    :func:`stream_warc`: an unbounded (source_file, value) frame with
+def _parse_wet_files(raw: DataFrame,
+                     record_types: tuple[str, ...] | None) -> DataFrame:
+    return _parse_records(raw, record_types, lambda payload, h: [
+        h("WARC-Target-URI").alias("target_uri"),
+        h("WARC-Date").alias("warc_date"),
+        h("Content-Length").try_cast("long").alias("content_length"),
+        payload.alias("payload")])
+
+
+def _binary_shards(spark: SparkSession, path: str,
+                   glob: str | None = None,
+                   max_files_per_trigger: int | None = None,
+                   stream: bool = False) -> DataFrame:
+    """The one ``binaryFile`` shard source, batch or streaming: a
+    (path, content) frame with one row per file — whole shards, the
+    way the WET/WARC decoders and the tar-shard readers need them
+    (gzip members and tars don't split into lines). ``glob`` filters
+    file names; ``max_files_per_trigger`` paces a stream."""
+    r = spark.readStream if stream else spark.read
+    r = r.format("binaryFile")
+    if stream:      # a streaming file source needs its schema up front
+        r = r.schema("path string, modificationTime timestamp, "
+                     "length long, content binary")
+    if glob is not None:
+        r = r.option("pathGlobFilter", glob)
+    if max_files_per_trigger is not None:
+        r = r.option("maxFilesPerTrigger", int(max_files_per_trigger))
+    return r.load(path).select("path", "content")
+
+
+def _decode_shard(path: str, content, cap: int, who: str) -> str:
+    """One whole shard as text: gunzip when gzip-framed, then UTF-8
+    decode (undecodable bytes replaced). Raises ValueError naming
+    ``max_shard_bytes`` when the shard is, or decompresses to, more
+    than ``cap`` bytes; the path goes last, so a long one cannot push
+    that name past a quarantine reason's cut."""
+    import gzip
+    import io
+    bb = bytes(content)
+    if bb[:2] == b"\x1f\x8b":
+        # stream-decompress in bounded chunks so an over-cap shard
+        # aborts after ~cap bytes, not after buffering the whole bomb
+        chunks, total = [], 0
+        with gzip.GzipFile(fileobj=io.BytesIO(bb)) as gz:
+            while True:
+                chunk = gz.read(16 << 20)
+                if not chunk:
+                    break
+                total += len(chunk)
+                if total > cap:
+                    raise ValueError(
+                        f"{who}: shard decompresses past "
+                        f"max_shard_bytes={cap} bytes (re-shard the "
+                        f"input or raise the cap): {path}")
+                chunks.append(chunk)
+        bb = b"".join(chunks)
+    elif len(bb) > cap:
+        raise ValueError(
+            f"{who}: shard is {len(bb)} bytes, past "
+            f"max_shard_bytes={cap} (re-shard the input or raise the "
+            f"cap): {path}")
+    return bb.decode("utf-8", errors="replace")
+
+
+def _shard_text(spark: SparkSession, path: str, glob: str,
+                max_files_per_trigger: int | None, stream: bool,
+                max_shard_bytes: int, who: str,
+                on_error: str) -> DataFrame:
+    """Decoded shards behind every WET/WARC reader but the JVM-decoded
+    :func:`read_wet` / :func:`read_warc`: (source_file, value) with
     value = one whole decompressed shard as text.
 
-    The streaming text source has no ``wholetext`` mode (it emits
-    lines, destroying record framing), so shards arrive through the
-    ``binaryFile`` source — one row per file — and a tiny Arrow-batched
-    UDF gunzips/decodes each file to text (per FILE, not per record:
-    the only Python in the path, unavoidable because gzip isn't a SQL
-    expression).
+    Shards arrive through :func:`_binary_shards` — the streaming text
+    source has no ``wholetext`` mode (it emits lines, destroying
+    record framing) — and :func:`_decode_shard` runs per FILE, not per
+    record, through the one quarantine kernel (``util._row_map``): the
+    only Python in the path, unavoidable because gzip isn't a SQL
+    expression.
 
     Memory bound (documented, per ISO 28500's unsplittable gzip
     members): each task holds ONE decompressed shard in memory while
@@ -244,104 +289,31 @@ def _stream_shard_text(spark: SparkSession, path: str, glob: str,
     the offending path as soon as the cap is crossed — a clear
     resource error instead of an executor OOM that kills co-resident
     tasks. Default 4 GiB (~10× a normal WET shard); raise it, or
-    re-shard the input, for legitimately bigger files."""
-    import pandas as pd
-    from pyspark.sql.types import StringType
+    re-shard the input, for legitimately bigger files.
 
-    r = spark.readStream.format("binaryFile") \
-        .schema("path string, modificationTime timestamp, "
-                "length long, content binary") \
-        .option("pathGlobFilter", glob)
-    if max_files_per_trigger is not None:
-        r = r.option("maxFilesPerTrigger", int(max_files_per_trigger))
-
+    ``on_error="raise"`` fails on the first bad shard;
+    ``"quarantine"`` adds ``corrupt_reason`` (see
+    :func:`_split_quarantine`) — a billion-shard crawl ALWAYS carries
+    a few truncated gzip members or bombs, and one must not kill an
+    hours-long drain."""
     cap = int(max_shard_bytes)
-    return (r.load(path)
-            .select(F.col("path").alias("source_file"),
-                    _shard_decode_udf(cap, who)(
-                        F.col("path"), F.col("content"))
-                    .alias("value")))
+    raw = _binary_shards(spark, path, glob, max_files_per_trigger,
+                         stream).withColumnRenamed("path", "source_file")
+    return _row_map(raw, "source_file", ["source_file", "content"],
+                    [StructField("value", StringType())],
+                    lambda p, b: (_decode_shard(p, b, cap, who),),
+                    on_error)
 
 
-def _shard_decode_udf(cap: int, who: str, quarantine: bool = False):
-    """Arrow-batched gunzip+decode of whole shards. ``quarantine=True``
-    returns a (value, corrupt_reason) struct instead of raising:
-    truncated/corrupt gzip members and over-cap shards (gzip bombs)
-    become one NULL-value row with the reason — a billion-shard crawl
-    ALWAYS carries a few, and one must not kill an hours-long drain
-    (the shard twin of the multimodal decode quarantine)."""
-    import pandas as pd
-    from pyspark.sql.types import StringType
-
-    def _one(p, b):
-        import gzip
-        import io
-        bb = bytes(b)
-        if bb[:2] == b"\x1f\x8b":
-            # stream-decompress in bounded chunks so an over-cap
-            # shard aborts after ~cap bytes, not after buffering
-            # the whole bomb
-            chunks, total = [], 0
-            with gzip.GzipFile(fileobj=io.BytesIO(bb)) as gz:
-                while True:
-                    chunk = gz.read(16 << 20)
-                    if not chunk:
-                        break
-                    total += len(chunk)
-                    if total > cap:
-                        raise ValueError(
-                            f"{who}: shard {p} decompresses "
-                            f"past max_shard_bytes={cap} bytes; "
-                            "re-shard the input or raise the cap")
-                    chunks.append(chunk)
-            bb = b"".join(chunks)
-        elif len(bb) > cap:
-            raise ValueError(
-                f"{who}: shard {p} is {len(bb)} bytes, past "
-                f"max_shard_bytes={cap}; re-shard the input or "
-                "raise the cap")
-        return bb.decode("utf-8", errors="replace")
-
-    if not quarantine:
-        # no type hints: PEP-563 stringifies them under this module's
-        # `from __future__ import annotations`, which pandas_udf rejects
-        @F.pandas_udf(StringType())
-        def _decode(paths, content):
-            return pd.Series([_one(p, b)
-                              for p, b in zip(paths, content)])
-        return _decode
-
-    @F.pandas_udf("value string, corrupt_reason string")
-    def _decode_q(paths, content):
-        vals, reasons = [], []
-        for p, b in zip(paths, content):
-            try:
-                vals.append(_one(p, b))
-                reasons.append(None)
-            except Exception as e:   # noqa: BLE001
-                vals.append(None)
-                reasons.append(f"{type(e).__name__}: {e}"[:300])
-        return pd.DataFrame({"value": vals, "corrupt_reason": reasons})
-    return _decode_q
-
-
-def _shard_text_quarantine(raw_bin: DataFrame, cap: int, who: str
-                           ) -> tuple[DataFrame, DataFrame]:
-    """(good, quarantine) from a binaryFile frame of shards: good =
-    (source_file, value) decoded shards; quarantine = (source_file,
-    corrupt_reason) for shards that failed to decompress (truncated /
-    corrupt gzip, over-cap bombs). Both are projections of the same
-    scan plan."""
-    dec = (raw_bin.select(
-        F.col("path").alias("source_file"),
-        _shard_decode_udf(cap, who, quarantine=True)(
-            F.col("path"), F.col("content")).alias("d")))
-    good = (dec.filter(F.col("d.corrupt_reason").isNull())
-            .select("source_file", F.col("d.value").alias("value")))
-    bad = (dec.filter(F.col("d.corrupt_reason").isNotNull())
-           .select("source_file",
-                   F.col("d.corrupt_reason").alias("corrupt_reason")))
-    return good, bad
+def _split_quarantine(dec: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(good, quarantine) from a quarantine-mode :func:`_shard_text`
+    frame: good = (source_file, value) decoded shards; quarantine =
+    (source_file, corrupt_reason) for shards that failed to decompress
+    (truncated / corrupt gzip, over-cap bombs). Both are projections
+    of the same scan plan."""
+    bad = F.col("corrupt_reason").isNotNull()
+    return (dec.filter(~bad).select("source_file", "value"),
+            dec.filter(bad).select("source_file", "corrupt_reason"))
 
 
 def read_wet_quarantine(spark: SparkSession, path: str,
@@ -357,11 +329,9 @@ def read_wet_quarantine(spark: SparkSession, path: str,
     — use this twin for raw crawl intake, where a few bad shards per
     billion are a fact, not a bug (mirrors
     :func:`read_jsonl_quarantine`)."""
-    raw = (spark.read.format("binaryFile")
-           .option("pathGlobFilter", glob).load(path)
-           .select("path", "content"))
-    good, bad = _shard_text_quarantine(raw, int(max_shard_bytes),
-                                       "read_wet_quarantine")
+    good, bad = _split_quarantine(_shard_text(
+        spark, path, glob, None, False, max_shard_bytes,
+        "read_wet_quarantine", "quarantine"))
     return _parse_wet_files(good, record_types), bad
 
 
@@ -373,11 +343,9 @@ def read_warc_quarantine(spark: SparkSession, path: str,
     """(records, quarantine) batch WARC reader that survives corrupt
     shards — the :func:`read_warc` twin of
     :func:`read_wet_quarantine`."""
-    raw = (spark.read.format("binaryFile")
-           .option("pathGlobFilter", glob).load(path)
-           .select("path", "content"))
-    good, bad = _shard_text_quarantine(raw, int(max_shard_bytes),
-                                       "read_warc_quarantine")
+    good, bad = _split_quarantine(_shard_text(
+        spark, path, glob, None, False, max_shard_bytes,
+        "read_warc_quarantine", "quarantine"))
     return _parse_warc_files(good, record_types), bad
 
 
@@ -392,15 +360,9 @@ def stream_wet_quarantine(spark: SparkSession, path: str,
     hours-long drain. Both frames are streaming projections of the
     same binaryFile source; start each on its OWN checkpoint (two
     queries, two passes — the price of auditing the bad shards)."""
-    r = spark.readStream.format("binaryFile") \
-        .schema("path string, modificationTime timestamp, "
-                "length long, content binary") \
-        .option("pathGlobFilter", glob)
-    if max_files_per_trigger is not None:
-        r = r.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    good, bad = _shard_text_quarantine(
-        r.load(path).select("path", "content"),
-        int(max_shard_bytes), "stream_wet_quarantine")
+    good, bad = _split_quarantine(_shard_text(
+        spark, path, glob, max_files_per_trigger, True, max_shard_bytes,
+        "stream_wet_quarantine", "quarantine"))
     return _parse_wet_files(good, record_types), bad
 
 
@@ -412,13 +374,13 @@ def stream_wet(spark: SparkSession, path: str,
     """Streaming twin of :func:`read_wet`: an unbounded record frame
     over WET shards landing under ``path`` — the continuous crawl
     front door. Shards decode per file (see
-    :func:`_stream_shard_text` for the memory bound and the
+    :func:`_shard_text` for the memory bound and the
     ``max_shard_bytes`` guard); record split + header parse are then
     the SAME projections-only plan as the batch reader, so batch ==
     streaming row-for-row on the same files. Downstream curation/dedup
     stages compose (all stateless per record)."""
-    raw = _stream_shard_text(spark, path, glob, max_files_per_trigger,
-                             max_shard_bytes, "stream_wet")
+    raw = _shard_text(spark, path, glob, max_files_per_trigger, True,
+                      max_shard_bytes, "stream_wet", "raise")
     return _parse_wet_files(raw, record_types)
 
 
@@ -432,8 +394,8 @@ def stream_warc(spark: SparkSession, path: str,
     under ``path``. Same decode bound as :func:`stream_wet`; same
     batch == streaming row-parity by construction
     (:func:`_parse_warc_files` is projections/filters only)."""
-    raw = _stream_shard_text(spark, path, glob, max_files_per_trigger,
-                             max_shard_bytes, "stream_warc")
+    raw = _shard_text(spark, path, glob, max_files_per_trigger, True,
+                      max_shard_bytes, "stream_warc", "raise")
     return _parse_warc_files(raw, record_types)
 
 
@@ -462,14 +424,21 @@ def write_wet(df: DataFrame, path: str, uri_col: str, payload_col: str,
         # payloads frame correctly for byte-exact consumers (warcio)
         F.octet_length(F.col(payload_col)).cast("string"), F.lit("\n\n"),
         F.col(payload_col), F.lit("\n"))
+    _write_records(df.select(rec.alias("value")), path, date,
+                   compression, mode)
+
+
+def _write_records(body: DataFrame, path: str, date: str,
+                   compression: str | None, mode: str) -> None:
+    """Write ``body`` (one ``value`` string per WARC record) as text
+    shards, headed by ONE ``warcinfo`` record for the whole dataset
+    via a tiny union — records are self-delimiting, placement
+    within/among shards is free for parsers (see :func:`write_wet`
+    for the per-shard-header caveat)."""
     info = "software: detanalysis_spark"
     head = ("WARC/1.0\nWARC-Type: warcinfo\n"
             f"WARC-Date: {date}\nContent-Length: {len(info)}\n\n"
             f"{info}\n")
-    body = df.select(rec.alias("value"))
-    # one warcinfo record for the whole dataset via a tiny union —
-    # records are self-delimiting, placement within/among shards is
-    # free for parsers (see docstring for the per-shard-header caveat)
     out = local_frame(body.sparkSession, [(head,)], "value string") \
         .unionByName(body)
     w = out.write.mode(mode)
@@ -507,20 +476,12 @@ def read_warc(spark: SparkSession, path: str,
 
 def _parse_warc_files(raw: DataFrame,
                       record_types: tuple[str, ...] | None) -> DataFrame:
-    rec = F.explode(F.slice(
-        F.split(F.col("value"), r"(?m)^WARC/\d+\.\d+\r?\n"),
-        2, 2_147_483_646)).alias("rec")
-    recs = raw.select("source_file", rec)
-    header = F.regexp_extract(F.col("rec"),
-                              r"(?s)^(.*?)\r?\n\r?\n", 1)
-    payload = F.regexp_replace(
-        F.regexp_replace(F.col("rec"), r"(?s)^.*?\r?\n\r?\n", ""),
-        r"(?s)\r?\n\r?\n$", "")
+    return _parse_records(raw, record_types, _warc_columns)
 
-    def h(name: str):
-        return F.regexp_extract(header,
-                                rf"(?im)^{name}:\s*(.*?)\r?$", 1)
 
+def _warc_columns(payload, h) -> list:
+    """Full-WARC record columns: WARC headers plus the HTTP envelope
+    of the payload (status, Content-Type, stripped body)."""
     http_head = F.regexp_extract(
         payload, r"(?s)^(HTTP/\d+(?:\.\d+)?[^\r\n]*\r?\n.*?)\r?\n\r?\n",
         1)
@@ -533,20 +494,13 @@ def _parse_warc_files(raw: DataFrame,
     body = F.when(has_http, F.regexp_replace(
         payload, r"(?s)^HTTP/\d+(?:\.\d+)?[^\r\n]*\r?\n.*?\r?\n\r?\n",
         "")).otherwise(payload)
-    out = recs.select(
-        "source_file",
-        F.lower(h("WARC-Type")).alias("warc_type"),
-        h("WARC-Target-URI").alias("target_uri"),
-        h("WARC-Date").alias("warc_date"),
-        h("WARC-Record-ID").alias("record_id"),
-        h("Content-Length").try_cast("long").alias("content_length"),
-        status.alias("http_status"),
-        ctype.alias("http_content_type"),
-        body.alias("body"))
-    if record_types is not None:
-        out = out.filter(F.col("warc_type").isin(
-            [t.lower() for t in record_types]))
-    return out
+    return [h("WARC-Target-URI").alias("target_uri"),
+            h("WARC-Date").alias("warc_date"),
+            h("WARC-Record-ID").alias("record_id"),
+            h("Content-Length").try_cast("long").alias("content_length"),
+            status.alias("http_status"),
+            ctype.alias("http_content_type"),
+            body.alias("body")]
 
 
 def write_warc(df: DataFrame, path: str, uri_col: str, body_col: str,
@@ -591,17 +545,8 @@ def write_warc(df: DataFrame, path: str, uri_col: str, body_col: str,
         F.lit("Content-Length: "),
         F.octet_length(http).cast("string"), F.lit("\n\n"),
         http, F.lit("\n"))
-    info = "software: detanalysis_spark"
-    head = ("WARC/1.0\nWARC-Type: warcinfo\n"
-            f"WARC-Date: {date}\nContent-Length: {len(info)}\n\n"
-            f"{info}\n")
-    body = df.select(rec.alias("value"))
-    out = local_frame(body.sparkSession, [(head,)], "value string") \
-        .unionByName(body)
-    w = out.write.mode(mode)
-    if compression:
-        w = w.option("compression", compression)
-    w.text(path)
+    _write_records(df.select(rec.alias("value")), path, date,
+                   compression, mode)
 
 
 def read_csv_corpus(spark: SparkSession, path: str,
@@ -618,11 +563,8 @@ def read_csv_corpus(spark: SparkSession, path: str,
     CSV plan whose only referenced column is the corrupt record, so
     the quarantine must project data columns anyway).
     """
-    if isinstance(schema, str):
-        full = f"{schema}, __corrupt__ string"
-    else:
-        full = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                         for f in schema.fields) + ", __corrupt__ string"
+    full = ", ".join(f for _, f in _ddl_columns(schema)) \
+        + ", __corrupt__ string"
     df = (spark.read
           .options(header=str(header).lower(), mode="PERMISSIVE",
                    columnNameOfCorruptRecord="__corrupt__", **options)

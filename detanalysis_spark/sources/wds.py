@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .textio import _binary_shards
+
 __all__ = ["write_tar_shards", "read_tar_shards", "stream_tar_shards"]
 
 _MEMBER_SCHEMA = "key string, ext string, payload binary, shard string"
@@ -170,10 +172,8 @@ def read_tar_shards(spark: SparkSession, path: str,
     per task — shards are written bounded; re-shard upstream rather
     than raising limits), and the tar parse is Arrow-batched.
     """
-    bin_df = (spark.read.format("binaryFile")
-              .load(os.path.join(path, pattern))
-              .select("path", "content"))
-    long = bin_df.mapInPandas(_parse_tar_batches, _MEMBER_SCHEMA)
+    long = _binary_shards(spark, os.path.join(path, pattern)) \
+        .mapInPandas(_parse_tar_batches, _MEMBER_SCHEMA)
     if not wide:
         return long
     return (long.groupBy("key")
@@ -194,17 +194,7 @@ def stream_tar_shards(spark: SparkSession, path: str,
     ``(key, ext, payload, shard)``, append-mode friendly (stateless
     projection — compose with ``streaming_dedup_exact`` /
     ``stream_to_parquet`` downstream)."""
-    from pyspark.sql.types import (BinaryType, LongType, StringType,
-                                   StructField, StructType,
-                                   TimestampType)
-    schema = StructType([StructField("path", StringType()),
-                         StructField("modificationTime", TimestampType()),
-                         StructField("length", LongType()),
-                         StructField("content", BinaryType())])
-    reader = spark.readStream.format("binaryFile").schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger",
-                               int(max_files_per_trigger))
-    sdf = reader.load(os.path.join(path, pattern)) \
-        .select("path", "content")
+    sdf = _binary_shards(spark, os.path.join(path, pattern),
+                         max_files_per_trigger=max_files_per_trigger,
+                         stream=True)
     return sdf.mapInPandas(_parse_tar_batches, _MEMBER_SCHEMA)

@@ -127,12 +127,6 @@ def trace_energy(trace: Column | str, fs: float) -> Column:
     return F.aggregate(t, F.lit(0.0), lambda acc, x: acc + x) / F.lit(float(fs))
 
 
-def trace_slice(trace: Column | str, start: int, length: int) -> Column:
-    """1-based window slice over the waveform (pre/post-trigger regions)."""
-    t = F.col(trace) if isinstance(trace, str) else trace
-    return F.slice(t, start, length)
-
-
 # ----------------------------------------------------------------------
 # pandas_udf kernels (Arrow-batched; numpy vectorized across the batch)
 # ----------------------------------------------------------------------

@@ -13,6 +13,12 @@ fallback of ``write_small_parquet``) goes through here.
 
 ``blas_single_thread`` keeps numpy's OpenBLAS pool at one thread
 around driver-side solves (``photon.least_squares_lm``).
+
+``_row_map`` is the one quarantine kernel for per-row binary-payload
+decode (the multimodal operators, the WET/WARC shard readers): a
+100-TB crawl always carries some truncated or exotic payloads, and in
+``on_error="quarantine"`` mode one of them becomes a row with NULL
+outputs and a ``corrupt_reason`` instead of a failed job.
 """
 from __future__ import annotations
 
@@ -35,18 +41,13 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
         return spark.createDataFrame([], schema)
     try:
         import pandas as pd
-        if isinstance(schema, str):
-            fields = _split_ddl(schema)
-        else:                      # StructType
-            fields = [f"{f.name} {f.dataType.simpleString()}"
-                      for f in schema.fields]
-        names = [f.split()[0].strip("`") for f in fields]
-        pdf = pd.DataFrame(rows, columns=names)
+        cols = _ddl_columns(schema)
+        pdf = pd.DataFrame(rows, columns=[name for name, _ in cols])
         # an integer column containing None coerces to float64 in
         # pandas; magnitudes past 2^53 would then lose precision
         # silently — fall back to the exact (slow) path there
-        for f in fields:
-            name, typ = f.split()[0].strip("`"), f.split()[-1].lower()
+        for name, f in cols:
+            typ = f.split()[-1].lower()
             if typ in ("int", "long", "bigint", "integer", "smallint",
                        "tinyint") and str(pdf[name].dtype) == "float64":
                 if pdf[name].abs().max() >= 2 ** 53:
@@ -115,22 +116,27 @@ def fan_out_small(df: DataFrame, min_partitions: int | None = None
 _FAN_OUT_CACHE: dict = {}
 
 
-def _split_ddl(schema: str) -> list[str]:
-    """Split a DDL column list on top-level commas (array<...> and
-    struct<...> commas don't count)."""
+def _ddl_columns(schema) -> list[tuple[str, str]]:
+    """``(name, "name type")`` per top-level column of a DDL string or
+    a StructType. A DDL string splits on depth-0 commas (array<...>
+    and struct<...> commas don't count), empty pieces are skipped, and
+    the name is the first token with its backticks stripped."""
+    if not isinstance(schema, str):
+        return [(f.name, f"{f.name} {f.dataType.simpleString()}")
+                for f in schema.fields]
     out, depth, cur = [], 0, []
-    for ch in schema:
+    for ch in schema + ",":
         if ch == "<":
             depth += 1
         elif ch == ">":
             depth -= 1
         if ch == "," and depth == 0:
-            out.append("".join(cur).strip())
+            piece = "".join(cur).strip()
+            if piece:
+                out.append((piece.split()[0].strip("`"), piece))
             cur = []
         else:
             cur.append(ch)
-    if cur:
-        out.append("".join(cur).strip())
     return out
 
 
@@ -210,13 +216,78 @@ def _ddl_arrow_table(rows: list, schema: str):
         "string": pa.string(), "boolean": pa.bool_(),
         "binary": pa.binary(),
     }
-    fields = []
-    for f in _split_ddl(schema):
-        parts = f.split()
-        fields.append(pa.field(parts[0].strip("`"), types[parts[-1].lower()]))
+    fields = [pa.field(name, types[f.split()[-1].lower()])
+              for name, f in _ddl_columns(schema)]
     arrays = [pa.array([r[i] for r in rows], type=fld.type)
               for i, fld in enumerate(fields)]
     return pa.Table.from_arrays(arrays, schema=pa.schema(fields))
+
+
+# a quarantined row's reason: "Type: message", cut to this many chars
+_REASON_CHARS = 300
+
+
+def _quarantine_mode(on_error: str) -> bool:
+    """True for ``on_error="quarantine"``, False for ``"raise"``; any
+    other value is a ValueError on the driver, at plan-build time."""
+    if on_error not in ("raise", "quarantine"):
+        raise ValueError(
+            f"on_error must be 'raise' or 'quarantine', got {on_error!r}")
+    return on_error == "quarantine"
+
+
+def _row_map(df: DataFrame, key: str, inputs: list[str], fields: list,
+             fn, on_error: str) -> DataFrame:
+    """One output row per input row: the ``key`` column passes through
+    with its own name and type, then ``fields`` (StructFields) hold
+    ``fn(*input values)``, a tuple of ``len(fields)`` values.
+
+    ``on_error="raise"``: an exception in ``fn`` propagates and fails
+    the job (right for curated fixtures, where a bad payload means a
+    bug). ``"quarantine"``: the row survives with NULL ``fields`` and a
+    trailing ``corrupt_reason`` string (``"Type: message"``, at most
+    ``_REASON_CHARS`` chars; NULL for good rows) — one scan, callers
+    split good from bad with a filter on ``corrupt_reason``.
+
+    Arrow-batched through ``mapInPandas``: one Python round trip per
+    batch, ``fn`` once per row. Columns are addressed by position and
+    outputs built as object Series, so any key name (``_id``,
+    ``doc-id``) works and 64-bit integers never detour through
+    float64 when a NULL shares their batch."""
+    import pandas as pd
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    quarantine = _quarantine_mode(on_error)
+    out_fields = [df.schema[key], *fields]
+    if quarantine:
+        out_fields.append(StructField("corrupt_reason", StringType()))
+    failed = (None,) * len(fields)
+
+    def run(batches):
+        for pdf in batches:
+            cols = [[] for _ in out_fields[1:]]
+            for args in zip(*(pdf.iloc[:, j]
+                              for j in range(1, pdf.shape[1]))):
+                try:
+                    vals = fn(*args)
+                except Exception as e:   # noqa: BLE001 — quarantined
+                    if not quarantine:
+                        raise
+                    vals = failed + (
+                        f"{type(e).__name__}: {e}"[:_REASON_CHARS],)
+                else:
+                    if quarantine:
+                        vals = (*vals, None)
+                for col, v in zip(cols, vals):
+                    col.append(v)
+            out = [pdf.iloc[:, 0]] + [
+                pd.Series(c, index=pdf.index, dtype=object) for c in cols]
+            # integer labels: Spark matches the output schema by position
+            yield pd.DataFrame(dict(enumerate(out)))
+
+    sel = df.select(key, *[df[c].alias(f"__row_map_in{j}")
+                           for j, c in enumerate(inputs)])
+    return sel.mapInPandas(run, StructType(out_fields))
 
 
 def _blas_thread_fns(lib):

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, DoubleType, StructField,
                                StructType)
 
+from .operators.sampling import every_nth
 from .traces import rfft_udf
 
 __all__ = [
@@ -200,18 +201,6 @@ def transfer_functions(moments: DataFrame,
 # ----------------------------------------------------------------------
 # continuous path: downsample → rechunk → FFT → gather → bin aggregate
 # ----------------------------------------------------------------------
-def every_nth(df: DataFrame, order_col: str, factor: int) -> DataFrame:
-    """Deterministic every-Nth downsample (O6): keep rows whose ordinal
-    satisfies (i-1) % factor == 0 (vibration_analyzer.py:397-401).
-
-    Assumes ``order_col`` is a dense 0-based ordinal (the fixtures'
-    event_id is). Pure filter — no sort, no shuffle.
-    """
-    if factor <= 1:
-        return df
-    return df.filter((F.col(order_col) % factor) == 0)
-
-
 def _chopper(chunk_samples: int, order_col: str, trace_col: str):
     """The one rechunk kernel, shared by :func:`rechunk_traces` (empty
     carry) and ``streaming.rechunk_stream`` (the carried remainder).

@@ -904,6 +904,101 @@ def test_audio_quarantine_survives_corrupt_payloads(spark):
                   if r.corrupt_reason is not None) == [3]
 
 
+def test_quarantine_kernel_ids_classes_and_reason_length(spark, tmp_path):
+    """The one row-map kernel behind every decode operator: the id
+    column passes through under any name (pandas renames ``_id`` and
+    ``doc-id`` on itertuples rows), raise mode surfaces the row
+    function's own exception class, and a quarantine reason is cut to
+    exactly 300 chars — from a multimodal operator and a shard reader
+    alike."""
+    import gzip
+
+    from detanalysis_spark.sources.textio import read_wet_quarantine
+
+    rng = np.random.default_rng(21)
+    ids = [7, 11, 42]
+    rows = [(i, bytearray(M.encode_png(rng.random((8, 8, 3)))),
+             bytearray((rng.uniform(-0.5, 0.5, 1024) * 32767)
+                       .astype("<i2").tobytes()),
+             8, 8, 3, "PNG") for i in ids]
+    for id_col in ("_id", "doc-id"):
+        df = spark.createDataFrame(rows, StructType([
+            StructField(id_col, LongType()),
+            StructField("payload", BinaryType()),
+            StructField("audio", BinaryType()),
+            StructField("width", IntegerType()),
+            StructField("height", IntegerType()),
+            StructField("channels", IntegerType()),
+            StructField("format", StringType())]))
+        ops = {
+            "image_header_info": lambda m: M.image_header_info(
+                df, id_col, on_error=m),
+            "image_features": lambda m: M.image_features(
+                df, id_col, on_error=m),
+            "image_phash": lambda m: M.image_phash(
+                df, id_col, on_error=m),
+            "audio_features": lambda m: M.audio_features(
+                df, id_col, payload_col="audio", on_error=m),
+            "audio_fingerprint": lambda m: M.audio_fingerprint(
+                df, id_col, payload_col="audio", on_error=m),
+        }
+        for name, op in ops.items():
+            for mode in ("raise", "quarantine"):
+                out = op(mode)
+                assert out.columns[0] == id_col, (name, mode)
+                got = out.collect()
+                assert sorted(r[0] for r in got) == ids, (name, mode)
+                assert ("corrupt_reason" in out.columns) == (
+                    mode == "quarantine"), (name, mode)
+                if mode == "quarantine":
+                    assert all(r.corrupt_reason is None for r in got)
+
+    # a format no codec handles: NotImplementedError naming the format
+    odd = spark.createDataFrame(
+        [(1, bytearray(b"\x00" * 16), 4, 4, 1, "Z" * 400)],
+        "img_id long, payload binary, width int, height int, "
+        "channels int, format string")
+    with pytest.raises(Exception, match="NotImplementedError: format"):
+        M.image_features(odd, "img_id", on_error="raise").collect()
+    (r,) = M.image_features(odd, "img_id", on_error="quarantine").collect()
+    assert r.mean_lum is None
+    assert r.corrupt_reason.startswith("NotImplementedError: format 'ZZ")
+    assert len(r.corrupt_reason) == 300
+
+    # a shard reader: an over-cap bomb whose long path overruns the cut
+    # (the reason still names max_shard_bytes, which the path follows)
+    p = tmp_path / "wetq"
+    p.mkdir()
+    (p / ("b" * 200 + ".txt.gz")).write_bytes(gzip.compress(b"A" * 4096))
+    recs, bad = read_wet_quarantine(spark, str(p), max_shard_bytes=1024)
+    assert recs.count() == 0
+    (b,) = bad.collect()
+    assert b.corrupt_reason.startswith(
+        "ValueError: read_wet_quarantine: shard decompresses past "
+        "max_shard_bytes=1024")
+    assert len(b.corrupt_reason) == 300
+
+
+def test_quarantine_keeps_64bit_hashes_exact(spark):
+    """A NULL-output row must not turn a batch's 64-bit hashes into
+    float64: quarantine-mode phashes of the good images equal the
+    raise-mode ones bit for bit."""
+    rng = np.random.default_rng(5)
+    good = [(i, bytearray(M.encode_raw8(rng.random((8, 8, 1)))),
+             8, 8, 1, "RAW8") for i in range(8)]
+    bad = [(99, bytearray(b"\x00" * 4), 8, 8, 1, "WEBP")]
+    ddl = ("img_id long, payload binary, width int, height int, "
+           "channels int, format string")
+    want = {r.img_id: r.phash for r in M.image_phash(
+        spark.createDataFrame(good, ddl).coalesce(1), "img_id").collect()}
+    assert any(abs(h) > 2 ** 53 for h in want.values())
+    got = {r.img_id: r.phash for r in M.image_phash(
+        spark.createDataFrame(good + bad, ddl).coalesce(1), "img_id",
+        on_error="quarantine").collect()}
+    assert got.pop(99) is None
+    assert got == want
+
+
 def test_sniff_image_header_all_formats(spark):
     """Header-only metadata sniff (round 11): real PNG/JPEG encoder
     output plus spec-built GIF/BMP headers all report (format, w, h)

@@ -72,3 +72,19 @@ def test_vanilla_session_puts_repo_root_on_worker_path():
     assert conf["spark.executorEnv.PYTHONPATH"].split(os.pathsep) == [ROOT]
     assert os.path.isdir(os.path.join(ROOT, "detanalysis_spark"))
     assert "spark.python.daemon.module" not in conf
+
+
+def test_every_public_name_resolves():
+    """Every name in every ``detanalysis_spark`` module's ``__all__``
+    exists on that module — a deleted function must leave the export
+    lists with it."""
+    import importlib
+    import pkgutil
+
+    import detanalysis_spark as pkg
+    mods = [pkg] + [importlib.import_module(m.name) for m in
+                    pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")]
+    names = [(m.__name__, n) for m in mods for n in getattr(m, "__all__", ())]
+    assert len(names) > 400
+    assert [(m, n) for m, n in names
+            if not hasattr(importlib.import_module(m), n)] == []
